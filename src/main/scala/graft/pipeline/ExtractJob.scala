@@ -30,8 +30,10 @@ final case class ManifestRow(
  */
 object ExtractJob {
 
-  /** Extract the URL host in pure built-ins (stays inside codegen). */
-  def hostCol = regexp_replace(parse_url(col("url"), lit("HOST")), "^www\\.", "")
+  /** Extract the URL host in pure built-ins (stays inside codegen). A
+    * malformed url gets a null host, like a null url, instead of failing
+    * the job under ANSI mode. */
+  def hostCol = regexp_replace(try_parse_url(col("url"), lit("HOST")), "^www\\.", "")
 
   /**
    * Hash-by-host partitioning with salt-based skew splitting. Hosts whose
@@ -40,9 +42,9 @@ object ExtractJob {
    * salt 0 so their pages stay co-located (host-local downstream joins and
    * robots/side-table broadcasts remain cheap).
    *
-   * The mega-host pre-pass is a columnar count on `url` only (column-pruned
-   * scan + partial agg) — at 100 TB it reads one string column and ships
-   * one row per distinct big host.
+   * The mega-host pre-pass ([[megaHostMap]]) is one aggregate over `url`
+   * only (column-pruned scan + partial agg): at 100 TB it reads one string
+   * column and ships at most `numPartitions + 1` rows to the driver.
    */
   def saltedRepartitionByHost(pages: DataFrame, numPartitions: Int): DataFrame = {
     val mega = megaHostMap(pages, numPartitions)
@@ -50,37 +52,51 @@ object ExtractJob {
   }
 
   /** The mega-host pre-pass alone: hosts whose row count exceeds
-    * `totalRows / numPartitions` → their salt-bucket count. Runs as one
-    * column-pruned scan over `url` ONLY — callers hand it the cheap input
-    * relation even when the relation being repartitioned is the (expensive
-    * to recompute) extracted side. */
-  def megaHostMap(pages: DataFrame, numPartitions: Int): org.apache.spark.broadcast.Broadcast[Map[String, Int]] =
-    pages.sparkSession.sparkContext.broadcast {
-      val counts = pages.select(hostCol.as("__host")).groupBy("__host").count().persist()
-      try {
-        val totalRows = math.max(1L, Option(counts.agg(sum("count")).first().get(0)).map(_.asInstanceOf[Long]).getOrElse(0L))
-        val rowsPerBucket = math.max(1L, totalRows / numPartitions)
-        counts.filter(col("count") > rowsPerBucket)
-          .collect()
-          .map(r => r.getString(0) -> math.ceil(r.getLong(1).toDouble / rowsPerBucket).toInt)
-          .toMap
-      } finally counts.unpersist()
+    * `totalRows / numPartitions` → their salt-bucket count. The null host
+    * (null or malformed urls) is a group like any other. Runs as one
+    * column-pruned aggregate over `url` ONLY — callers hand it the cheap
+    * input relation even when the relation being repartitioned is the
+    * (expensive to recompute) extracted side. */
+  def megaHostMap(pages: DataFrame, numPartitions: Int): org.apache.spark.broadcast.Broadcast[Map[String, Int]] = {
+    val top = megaHostCounts(pages, numPartitions).collect()
+    val totalRows = math.max(1L,
+      top.collectFirst { case r if r.getLong(2) == 1L => r.getLong(1) }.getOrElse(0L))
+    val rowsPerBucket = math.max(1L, totalRows / numPartitions)
+    pages.sparkSession.sparkContext.broadcast(
+      top.iterator
+        .filter(r => r.getLong(2) == 0L && r.getLong(1) > rowsPerBucket)
+        .map(r => r.getString(0) -> math.ceil(r.getLong(1).toDouble / rowsPerBucket).toInt)
+        .toMap)
+  }
+
+  /** `(__host, count, grouping_id)` for the `numPartitions + 1` largest
+    * groups of a host rollup; the grouping-id-1 row is the total row count.
+    * At most `numPartitions - 1` hosts can exceed `total / numPartitions`,
+    * so these rows hold every mega-host plus the total. `col("__host")`,
+    * not the bare name: a by-name rollup trips `DetectAmbiguousSelfJoin` on
+    * an anti-joined input. */
+  private[pipeline] def megaHostCounts(pages: DataFrame, numPartitions: Int): DataFrame =
+    pages.select(hostCol.as("__host"))
+      .rollup(col("__host"))
+      .agg(count(lit(1)).as("__n"), grouping_id().as("__gid"))
+      .orderBy(col("__n").desc)
+      .limit(numPartitions + 1)
+
+  /** The one salt function: per-url sub-bucket within a mega-host. Shared by
+    * the exchange plan ([[applySaltedRepartition]]) and the bucketed-ingest
+    * layout (Bench) — the two are only exchange-equivalent while they salt
+    * identically, so there is exactly one definition. */
+  def saltUdf(mega: org.apache.spark.broadcast.Broadcast[Map[String, Int]])
+      : org.apache.spark.sql.expressions.UserDefinedFunction =
+    udf { (host: String, url: String) =>
+      val buckets = mega.value.getOrElse(host, 1)
+      // a null url (in a mega null-host group) takes salt 0
+      if (buckets <= 1 || url == null) 0 else Math.floorMod(scala.util.hashing.MurmurHash3.stringHash(url), buckets)
     }
 
   /** Exchange on `xxhash64(host, salt)` using a precomputed mega-host map.
     * Payload-agnostic: works identically on raw pages and on extracted rows
     * (any relation with a `url` column). */
-  /** The one salt function: per-url sub-bucket within a mega-host. Shared by
-    * the exchange plan (below) and the bucketed-ingest layout (Bench) — the
-    * two are only exchange-equivalent while they salt identically, so there
-    * is exactly one definition. */
-  def saltUdf(mega: org.apache.spark.broadcast.Broadcast[Map[String, Int]])
-      : org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (host: String, url: String) =>
-      val buckets = mega.value.getOrElse(host, 1)
-      if (buckets <= 1) 0 else Math.floorMod(scala.util.hashing.MurmurHash3.stringHash(url), buckets)
-    }
-
   def applySaltedRepartition(
       df: DataFrame,
       mega: org.apache.spark.broadcast.Broadcast[Map[String, Int]],
@@ -304,35 +320,46 @@ object ExtractJob {
     * markup-heavy corpora (markup:text ≈ 10:1) pick extract_first; dense-
     * text corpora where the extracted row (content md + text + normalized)
     * outweighs its html pick shuffle_first. The sample is one
-    * `limit(sampleN)` read — O(one partition) at any corpus size. */
+    * `limit(sampleN)` read — O(one partition) at any corpus size — and its
+    * rows are extracted in parallel on the driver ([[sampleBytes]]). */
   def chooseVariant(pages: Dataset[PageRow], sampleN: Int = 256): String = {
-    // UTF-8 byte length without allocating the encoded array — the shuffle
-    // moves UTF8String bytes, so comparing UTF-16 char counts against html
-    // BYTE counts would misorder the sides by up to 3x on non-Latin text
-    def utf8Len(s: String): Long = {
-      var bytes = 0L
-      var i = 0
-      while (i < s.length) {
-        val cp = s.codePointAt(i)
-        bytes += (if (cp < 0x80) 1 else if (cp < 0x800) 2 else if (cp < 0x10000) 3 else 4)
-        i += Character.charCount(cp)
-      }
-      bytes
-    }
-    val sample = pages.toDF().select("url", "html").limit(sampleN).collect()
-    var htmlBytes = 0L
-    var extractedBytes = 0L
-    sample.foreach { r =>
-      val url = r.getString(0)
-      val html = r.getAs[Array[Byte]](1)
-      htmlBytes += (if (html == null) 0 else html.length)
-      val row = scrapeAny(url, html)
-      // the fields that dominate a shuffled ScrapedRow's serialized size
-      extractedBytes += utf8Len(row.content) + utf8Len(row.text_content) +
-        utf8Len(row.normalized_text) + utf8Len(row.excerpt) + utf8Len(row.description) +
-        row.links.iterator.map(l => utf8Len(l.url) + utf8Len(l.text)).sum
-    }
+    val (htmlBytes, extractedBytes) =
+      sampleBytes(pages.toDF().select("url", "html").limit(sampleN).collect())
     if (extractedBytes < htmlBytes) "extract_first" else "shuffle_first"
+  }
+
+  /** `(html bytes, extracted bytes)` of `(url, html)` sample rows. Rows are
+    * extracted in parallel; both are Long sums, so the result does not
+    * depend on the order rows finish in. */
+  private[pipeline] def sampleBytes(sample: Array[org.apache.spark.sql.Row]): (Long, Long) = {
+    val htmlBytes = sample.iterator.map { r =>
+      val html = r.getAs[Array[Byte]](1)
+      if (html == null) 0L else html.length.toLong
+    }.sum
+    val extractedBytes = java.util.Arrays.stream(sample).parallel()
+      .mapToLong(r => shuffledBytes(scrapeAny(r.getString(0), r.getAs[Array[Byte]](1))))
+      .sum()
+    (htmlBytes, extractedBytes)
+  }
+
+  /** The fields that dominate a shuffled ScrapedRow's serialized size. */
+  private[pipeline] def shuffledBytes(row: ScrapedRow): Long =
+    utf8Len(row.content) + utf8Len(row.text_content) +
+      utf8Len(row.normalized_text) + utf8Len(row.excerpt) + utf8Len(row.description) +
+      row.links.iterator.map(l => utf8Len(l.url) + utf8Len(l.text)).sum
+
+  // UTF-8 byte length without allocating the encoded array — the shuffle
+  // moves UTF8String bytes, so comparing UTF-16 char counts against html
+  // BYTE counts would misorder the sides by up to 3x on non-Latin text
+  private def utf8Len(s: String): Long = {
+    var bytes = 0L
+    var i = 0
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      bytes += (if (cp < 0x80) 1 else if (cp < 0x800) 2 else if (cp < 0x10000) 3 else 4)
+      i += Character.charCount(cp)
+    }
+    bytes
   }
 
   /** Auto-planned extraction for unbucketed input: [[chooseVariant]] on a

@@ -252,8 +252,10 @@ object Frontier {
     // ONCE (torrent blocks, deserialized BloomFilter objects cached by the
     // block manager) and the typed probe reads the row's own shard —
     // identical output (same sketch bytes, same xxhash64 input, same
-    // mightContainLong bit test; null urls hash to null and drop from both
-    // branches exactly as the literal expression did). The literal path is
+    // mightContainLong bit test). A null url is not dropped: xxhash64(NULL)
+    // is the seed, 42, so the row is probed like any other and, as the
+    // verify anti-join never matches a null key, kept by both forms and by
+    // the plain anti-join (FrontierBloomSpec pins it). The literal path is
     // kept under `probeViaBroadcast = false` as the A/B evidence harness
     // (FrontierBloomSpec pins output equality of the two forms).
     val mightContain =

@@ -219,6 +219,28 @@ class FrontierBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(viaLiterals == exact)
   }
 
+  test("null urls: xxhash64(NULL) is the seed, so null-url rows are probed and kept") {
+    val s = spark; import s.implicits._
+    graft.plans.GraftExtensions.registerNative(spark)
+    assert(spark.range(1).select(xxhash64(lit(null).cast("string"))).head.getLong(0) == 42L)
+    val cands = urls("nul", 40)
+      .union(Seq((null: String, -1L), (null: String, -2L)).toDF("url", "payload"))
+    val seenUrls = (0 until 10).map(i => s"https://nul.example.com/p/$i")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("url", "payload").collect().map(r => (Option(r.getString(0)), r.getLong(1)))
+        .sortBy(_._2).toSeq
+    for (seenHasNull <- Seq(false, true); k <- Seq(1, 4); viaBroadcast <- Seq(true, false)) {
+      val seen = (if (seenHasNull) seenUrls :+ (null: String) else seenUrls).toDF("url")
+      val exact = rows(cands.join(seen.select(col("url").as("u")),
+        col("url") === col("u"), "left_anti"))
+      val bloom = rows(Frontier.unseenByBloom(cands, seen, "url",
+        expectedSeen = 64L, shards = k, probeViaBroadcast = viaBroadcast))
+      val label = s"seenHasNull=$seenHasNull k=$k broadcast=$viaBroadcast"
+      assert(bloom == exact, label)
+      assert(bloom.count(_._1.isEmpty) == 2, s"null-url rows must be kept: $label")
+    }
+  }
+
   test("past MaxBloomShards the prefilter honestly falls back to the exact anti-join") {
     val s = spark; import s.implicits._
     graft.plans.GraftExtensions.registerNative(spark)

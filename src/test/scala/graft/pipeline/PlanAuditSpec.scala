@@ -96,8 +96,12 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     val mainScan = readSchemas.find(_.contains("html")).getOrElse(fail(s"no html scan in:\n$p"))
     assert(!mainScan.contains("warc_ts") && !mainScan.contains("text") && !mainScan.contains("lang"),
       s"unused columns not pruned from the shuffled scan: $mainScan")
-    // (the mega-host pre-pass runs as its own eager job — its url-only
-    // pruning is asserted by SparkJobSpec's plan-hygiene test)
+    // the mega-host pre-pass runs as its own eager job on the same input:
+    // its scan must read url only
+    val pre = plan(ExtractJob.megaHostCounts(pages.toDF().select("url", "html"), 4))
+    val preScans = "ReadSchema: [^\n]+".r.findAllIn(pre).toList
+    assert(preScans.nonEmpty && preScans.forall(r => r.contains("url") && !r.contains("html")),
+      s"pre-pass must scan url only:\n$pre")
   }
 
   test("embed cache join is an equi-join on cache_key (hash-partitionable)") {
