@@ -53,7 +53,6 @@ object BenchExtra {
 
     if (what == "curate" || what == "all") curatePhases(spark, sfDir, noop, timed)
     if (what == "incdedup" || what == "all") incdedupPhases(spark, timed)
-    if (what == "bloom") bloomProbeSize(spark, noop, timed)
     if (what == "ingest") ingestLegs(spark, timed)
     spark.stop()
   }
@@ -102,37 +101,6 @@ object BenchExtra {
         import scala.reflect.io.Directory
         new Directory(new java.io.File(dir)).deleteRecursively()
       } catch { case _: Exception => () }
-    }
-  }
-
-  /** Plan-size evidence for the r8 broadcast Bloom probe (VERDICT r7 #6):
-    * forced k=4 over a 4M-url seen set (~9.5 MB sketch per shard, ~38 MB
-    * total). The literal variant embeds all sketches in every task binary
-    * (watch for TaskSetManager "very large size" warnings in the log);
-    * the broadcast variant ships them once per executor. */
-  private def bloomProbeSize(spark: SparkSession, noop: DataFrame => Unit,
-                             timed: String => (=> Unit) => Unit): Unit = {
-    spark.sparkContext.setLogLevel("WARN")
-    val seenN = 4000000L
-    val seen = spark.range(seenN).selectExpr(
-      "concat('https://bloomprobe.example.com/p', id) AS url")
-    val cands = spark.range(200000).selectExpr(
-      // half overlap the seen set, half fresh
-      "concat('https://bloomprobe.example.com/p', CASE WHEN id % 2 = 0 THEN id ELSE id + 100000000 END) AS url")
-      .localCheckpoint(true)
-    val k = graft.pipeline.Frontier.bloomShards(seenN, 0.03).max(4)
-    val perShard = (seenN + k - 1) / k
-    val bits = graft.pipeline.Frontier.optimalNumBits(perShard, 0.03)
-    System.err.println(f"[benchextra] bloom probe: k=$k%d shards, " +
-      f"${bits / 8.0 / 1024 / 1024}%.1f MiB/sketch, " +
-      f"${k * bits / 8.0 / 1024 / 1024}%.1f MiB total literal payload in the r7 form")
-    Seq(true, false).foreach { bcast =>
-      val tag = if (bcast) "broadcast" else "literal"
-      (1 to 2).foreach { rep =>
-        timed(s"bloom:$tag:rep$rep")(noop(graft.pipeline.Frontier.unseenByBloom(
-          cands, seen, "url", expectedSeen = seenN, shards = k,
-          probeViaBroadcast = bcast)))
-      }
     }
   }
 

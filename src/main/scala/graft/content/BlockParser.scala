@@ -12,8 +12,9 @@ import graft.util.Js
  * keeps task skew bounded at cluster scale).
  *
  * The reference re-serializes + re-parses the DOM before dropping
- * (`blocks.ts:66-67`); we deep-clone the already-parsed tree instead — same
- * semantics, one parse per row (SURVEY.md §7.3 operator fusion).
+ * (`blocks.ts:66-67`); we copy the already-parsed tree instead, leaving the
+ * dropped subtrees out of the copy — same semantics, one parse and one
+ * partial copy per row (SURVEY.md §7.3 operator fusion).
  */
 object BlockParser {
 
@@ -93,23 +94,61 @@ object BlockParser {
   private val nonTypedBlockTags = Set("p", "div", "section", "article", "li", "dt", "dd", "figcaption")
   private val headingRe = "^h([1-6])$".r
 
+  /** Copy of `doc`'s tree without the subtrees `drop` matches (the root is
+    * never dropped), plus the copy of its body — the first `body` child of
+    * the root, as `DomDoc.deepClone` locates it, or the root if there is none.
+    * Drop matching reads only the element and its own subtree, which the
+    * source still holds intact, so this equals deep-cloning and then removing
+    * every match in document order. A dropped body is still copied (pruned,
+    * detached from the root): the removal left it as the fallback container. */
+  private def copyKept(doc: DomDoc, drop: Element => Boolean): (Element, Element) = {
+    val srcBody = doc.html.childElements.find(_.tag == "body").orNull
+    var body: Element = null
+    def copy(e: Element): Element = {
+      val c = new Element(e.tag)
+      e.attrs.copyTo(c.attrs)
+      if (e eq srcBody) body = c
+      val ch = e.children
+      var i = 0
+      while (i < ch.length) {
+        ch(i) match {
+          case el: Element =>
+            if (!drop(el)) c.appendChild(copy(el))
+            else if (el eq srcBody) copy(el)
+          case n => c.appendChild(n.deepClone())
+        }
+        i += 1
+      }
+      c
+    }
+    val html = copy(doc.html)
+    (html, if (body == null) html else body)
+  }
+
   def parseBlocks(
       doc: DomDoc,
       dropSelectors: Seq[String] = Nil,
       maxBlocks: Int = 2000,
       includeHtml: Boolean = false
   ): Vector[ContentBlock] = {
-    // fresh copy — the reference reloads the serialized root (blocks.ts:66)
-    val root = doc.deepClone()
+    // fresh copy — the reference reloads the serialized root (blocks.ts:66),
+    // then drops the noise subtrees; the copy leaves them out instead
+    val drop: Element => Boolean =
+      if (dropSelectors.isEmpty) defaultDropMatch
+      else Selector((DefaultDropSelectors ++ dropSelectors).mkString(", ")).matches
+    val (html, body) = copyKept(doc, drop)
+    blocksIn(html, body, maxBlocks, includeHtml)
+  }
 
-    if (dropSelectors.isEmpty)
-      root.html.descendants.toVector.foreach { e => if (defaultDropMatch(e)) e.remove() }
-    else {
-      val dropSel = Selector((DefaultDropSelectors ++ dropSelectors).mkString(", "))
-      root.html.descendants.toVector.foreach { e => if (dropSel.matches(e)) e.remove() }
-    }
-
-    val container = containerSelector.firstIn(root.html).getOrElse(root.body)
+  /** The blocks of an already-pruned copy: `html` its root, `body` the
+    * fallback container (possibly detached from `html`). */
+  private[content] def blocksIn(
+      html: Element,
+      body: Element,
+      maxBlocks: Int,
+      includeHtml: Boolean
+  ): Vector[ContentBlock] = {
+    val container = containerSelector.firstIn(html).getOrElse(body)
 
     val blocks = Vector.newBuilder[ContentBlock]
     var count = 0

@@ -60,6 +60,8 @@ final class AttrList {
     -1
   }
   def get(k: String): Option[String] = { val i = indexOf(k); if (i < 0) None else Some(kv(2 * i + 1)) }
+  /** `get(k).orNull` without the Option, for per-element probes in whole-tree walks. */
+  def getOrNull(k: String): String = { val i = indexOf(k); if (i < 0) null else kv(2 * i + 1) }
   def contains(k: String): Boolean = indexOf(k) >= 0
   def update(k: String, v: String): Unit = {
     val i = indexOf(k)
@@ -80,6 +82,11 @@ final class AttrList {
   def foreach(f: ((String, String)) => Unit): Unit = {
     var i = 0
     while (i < n) { f((kv(2 * i), kv(2 * i + 1))); i += 1 }
+  }
+  /** `foreach { case (k, v) => dst(k) = v }` without a tuple per pair. */
+  def copyTo(dst: AttrList): Unit = {
+    var i = 0
+    while (i < n) { dst(kv(2 * i)) = kv(2 * i + 1); i += 1 }
   }
   def values: Iterator[String] = (0 until n).iterator.map(i => kv(2 * i + 1))
   def size: Int = n
@@ -267,7 +274,7 @@ final class Element(val tag: String) extends Node {
 
   def deepClone(): Node = {
     val e = new Element(tag)
-    attrs.foreach { case (k, v) => e.attrs(k) = v }
+    attrs.copyTo(e.attrs)
     children.foreach { c => e.appendChild(c.deepClone()) }
     e
   }
@@ -356,9 +363,11 @@ final class DomDoc(val html: Element, val head: Element, val body: Element) {
   /** Full-document serialization — cheerio `$.root().html()`. */
   def outerHtml: String = html.outerHtml
 
+  /** Deep copy of the whole tree. `head`/`body` of the copy are the first
+    * `head`/`body` children of the copied root (the root itself if there is
+    * none), located by tag, not by identity with this document's fields. */
   def deepClone(): DomDoc = {
     val h = html.cloneElement()
-    // re-locate head/body in the clone by position
     val head2 = h.childElements.find(_.tag == "head").getOrElse(h)
     val body2 = h.childElements.find(_.tag == "body").getOrElse(h)
     new DomDoc(h, head2, body2)

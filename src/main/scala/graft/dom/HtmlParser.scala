@@ -23,8 +23,11 @@ import scala.collection.mutable
  *
  * The tokenizer walks the input exactly once (SAX-style events applied
  * straight to the arena of nodes); per-row cost is O(bytes). The builder is
- * used once per page row inside `mapPartitions` — instantiate nothing per
- * call beyond the node objects themselves.
+ * used once per page row inside `mapPartitions`. Per call it allocates the
+ * node objects, one open-element stack and one reusable start-tag scratch;
+ * per token only the strings the tree keeps: each text run is one substring
+ * of the input, and ASCII tag and attribute names resolve to shared
+ * lowercase instances ([[canonicalName]]) instead of a fresh lowercased copy.
  */
 object HtmlParser {
 
@@ -97,6 +100,83 @@ object HtmlParser {
     def value(i: Int): String = kv(2 * i + 1)
   }
 
+  /** HTML element names, common attribute names and the attributes the
+    * extractors read: [[canonicalName]] returns these instances for any
+    * ASCII spelling of them. */
+  private val knownNames: Array[String] = Array(
+    // elements
+    "a", "abbr", "address", "area", "article", "aside", "audio", "b", "base", "bdi", "bdo",
+    "big", "blockquote", "body", "br", "button", "canvas", "caption", "center", "cite",
+    "code", "col", "colgroup", "data", "datalist", "dd", "del", "details", "dfn", "dialog",
+    "div", "dl", "dt", "em", "embed", "fieldset", "figcaption", "figure", "font", "footer",
+    "form", "h1", "h2", "h3", "h4", "h5", "h6", "head", "header", "hgroup", "hr", "html",
+    "i", "iframe", "img", "input", "ins", "kbd", "label", "legend", "li", "link", "main",
+    "map", "mark", "menu", "meta", "meter", "nav", "noembed", "noframes", "noscript",
+    "object", "ol", "optgroup", "option", "output", "p", "param", "picture", "pre",
+    "progress", "q", "rp", "rt", "ruby", "s", "samp", "script", "section", "select",
+    "small", "source", "span", "strike", "strong", "style", "sub", "summary", "sup",
+    "svg", "table", "tbody", "td", "template", "textarea", "tfoot", "th", "thead", "time",
+    "title", "tr", "track", "tt", "u", "ul", "var", "video", "wbr", "xmp",
+    "circle", "defs", "g", "line", "path", "polygon", "polyline", "rect", "symbol", "use",
+    // attributes
+    "id", "class", "href", "src", "srcset", "sizes", "rel", "type", "name",
+    "content", "property", "itemprop", "itemscope", "itemtype", "lang", "charset",
+    "http-equiv", "alt", "width", "height", "hidden", "role", "aria-hidden", "aria-label",
+    "aria-modal", "aria-labelledby", "aria-expanded", "datetime", "target", "action",
+    "method", "value", "placeholder", "for", "colspan", "rowspan", "align", "valign",
+    "border", "cellpadding", "cellspacing", "bgcolor", "background", "poster", "controls",
+    "loading", "decoding", "async", "defer", "crossorigin", "integrity", "media", "dir",
+    "tabindex", "xmlns", "viewbox", "fill", "d", "onclick", "onload", "data-src",
+    "data-srcset", "data-price", "data-ad")
+
+  private val NameSlotMask = 1023
+  private val nameTable: Array[String] = {
+    val t = new Array[String](NameSlotMask + 1)
+    knownNames.foreach { nm =>
+      var slot = nameSlot(nm.hashCode)
+      while (t(slot) != null) slot = (slot + 1) & NameSlotMask
+      t(slot) = nm
+    }
+    t
+  }
+  private def nameSlot(h: Int): Int = (h ^ (h >>> 16)) & NameSlotMask
+
+  /** `s.substring(from, to).toLowerCase` without the copy for the names in
+    * [[knownNames]]: the hash is taken over the ASCII-lowercased chars and
+    * probed in an open-addressed table, so a hit allocates nothing. Non-ASCII
+    * and unknown names take the substring path, so Unicode case folding
+    * (`İ` and the like) is unchanged. ASCII folding on a hit is
+    * locale-independent. */
+  private def canonicalName(s: String, from: Int, to: Int): String = {
+    var h = 0
+    var k = from
+    while (k < to) {
+      val c = s.charAt(k)
+      if (c >= 0x80) return s.substring(from, to).toLowerCase
+      h = 31 * h + (if (c >= 'A' && c <= 'Z') c + 32 else c)
+      k += 1
+    }
+    var slot = nameSlot(h)
+    var cand = nameTable(slot)
+    while (cand != null) {
+      if (cand.length == to - from && isAsciiLowerOf(cand, s, from)) return cand
+      slot = (slot + 1) & NameSlotMask
+      cand = nameTable(slot)
+    }
+    s.substring(from, to).toLowerCase
+  }
+
+  /** `lower` equals the ASCII-lowercased `s[from, from + lower.length)`. */
+  private def isAsciiLowerOf(lower: String, s: String, from: Int): Boolean = {
+    var k = 0
+    while (k < lower.length) {
+      val c = s.charAt(from + k)
+      if (lower.charAt(k) != (if (c >= 'A' && c <= 'Z') (c + 32).toChar else c)) return false
+      k += 1
+    }
+    true
+  }
+
   def parse(htmlInput: String): DomDoc = {
     val html = if (htmlInput == null) "" else htmlInput
     val docHtml = new Element("html")
@@ -119,13 +199,9 @@ object HtmlParser {
       if (text.isEmpty) return
       if (!inBody && stack.isEmpty && text.exists(c => !Character.isWhitespace(c)))
         switchToBody()
-      val tgt = current
-      tgt.children.lastOption match {
-        case Some(t: TextNode) => t.data += text
-        case _ =>
-          if (tgt.children.length < MaxChildrenPerElement)
-            tgt.appendChild(new TextNode(text))
-      }
+      val ch = current.children
+      if (ch.nonEmpty && ch.last.isInstanceOf[TextNode]) ch.last.asInstanceOf[TextNode].data += text
+      else if (ch.length < MaxChildrenPerElement) current.appendChild(new TextNode(text))
     }
 
     def closePUpTo(): Unit = {
@@ -229,22 +305,20 @@ object HtmlParser {
       case "head" => ()
       case "body" => ()
       case t =>
-        val idx = stack.lastIndexWhere(_.tag == t)
+        val idx = lastIndexOfTag(t, t)
         if (idx >= 0) stack.dropRightInPlace(stack.length - idx)
     }
 
     // ---------------- tokenizer ----------------
     val n = html.length
     var i = 0
-    val textBuf = new java.lang.StringBuilder
+    // the pending text run is html[textStart, i): every character that is
+    // not markup is the contiguous next source char, so a run is one substring
+    var textStart = 0
     val scratch = new TagScratch
 
-    def flushText(): Unit = {
-      if (textBuf.length > 0) {
-        appendText(Entities.decode(textBuf.toString))
-        textBuf.setLength(0)
-      }
-    }
+    def flushText(): Unit =
+      if (i > textStart) appendText(Entities.decode(html.substring(textStart, i)))
 
     while (i < n) {
       val c = html.charAt(i)
@@ -266,20 +340,24 @@ object HtmlParser {
             val end = html.indexOf('>', i + 2)
             i = if (end < 0) n else end + 1
           }
+          textStart = i
         } else if (c1 == '?') {
           flushText()
           val end = html.indexOf('>', i + 2)
           i = if (end < 0) n else end + 1
+          textStart = i
         } else if (c1 == '/') {
           if (i + 2 < n && Character.isLetter(html.charAt(i + 2))) {
             flushText()
+            // the name ends at whitespace, '/' or '>' (HTML5 end-tag name
+            // state), so `</span/>` closes the span; the rest up to '>' is skipped
             var j = i + 2
+            while (j < n && !Character.isWhitespace(html.charAt(j)) && html.charAt(j) != '/' && html.charAt(j) != '>') j += 1
+            endTag(canonicalName(html, i + 2, j))
             while (j < n && html.charAt(j) != '>') j += 1
-            val raw = html.substring(i + 2, math.min(j, n))
-            val name = raw.takeWhile(ch => !Character.isWhitespace(ch)).toLowerCase
-            endTag(name)
             i = if (j < n) j + 1 else n
-          } else { textBuf.append(c); i += 1 }
+            textStart = i
+          } else i += 1
         } else if (Character.isLetter(c1)) {
           flushText()
           parseStartTag(html, i, scratch)
@@ -303,11 +381,9 @@ object HtmlParser {
           } else {
             startTag(scratch, scratch.selfClosing)
           }
-        } else { textBuf.append(c); i += 1 }
-      } else {
-        textBuf.append(c)
-        i += 1
-      }
+          textStart = i
+        } else i += 1
+      } else i += 1
     }
     flushText()
 
@@ -321,7 +397,7 @@ object HtmlParser {
     val nameStart = i
     while (i < n && (Character.isLetterOrDigit(s.charAt(i)) || s.charAt(i) == '-' || s.charAt(i) == ':')) i += 1
     out.clear()
-    out.tag = s.substring(nameStart, i).toLowerCase
+    out.tag = canonicalName(s, nameStart, i)
     var selfClosing = false
     var done = false
     while (!done && i < n) {
@@ -337,7 +413,7 @@ object HtmlParser {
           // attribute name
           val as = i
           while (i < n && !Character.isWhitespace(s.charAt(i)) && s.charAt(i) != '=' && s.charAt(i) != '>' && s.charAt(i) != '/') i += 1
-          val name = s.substring(as, i).toLowerCase
+          val name = canonicalName(s, as, i)
           while (i < n && Character.isWhitespace(s.charAt(i))) i += 1
           var value = ""
           if (i < n && s.charAt(i) == '=') {

@@ -17,7 +17,7 @@ object ContentExtractor extends Extractor {
     if (!ctx.extractContent) return Partial()
 
     Readability.parse(ctx.doc, ctx.finalUrl) match {
-      case Some(article) if article.content.nonEmpty =>
+      case Some(article) if article.hasContent =>
         var content = Markdown.fromElement(article.contentDom)
         val maxLength = ctx.maxContentLength
         if (content.length > maxLength)

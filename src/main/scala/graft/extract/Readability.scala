@@ -10,14 +10,25 @@ import graft.util.Js
 final case class Article(
     title: String,
     byline: Option[String],
-    content: String,       // serialized cleaned-article HTML
     contentDom: Element,   // the cleaned article container (for the markdown emitter)
     textContent: String,
     excerpt: Option[String],
     siteName: Option[String],
     publishedTime: Option[String],
     length: Int
-)
+) {
+  /** Serialized cleaned-article HTML (`contentDom.innerHtml`), built on first
+    * read: the extraction fold only asks whether it is empty ([[hasContent]]). */
+  lazy val content: String = contentDom.innerHtml
+
+  /** `content.nonEmpty` without serializing: every element and comment
+    * child serializes to at least its tag, a text child to nothing only when
+    * its data is empty. */
+  def hasContent: Boolean = contentDom.children.exists {
+    case t: TextNode => t.data.nonEmpty
+    case _           => true
+  }
+}
 
 /**
  * From-scratch Scala implementation of the Mozilla Readability algorithm
@@ -160,11 +171,13 @@ object Readability {
 
   // ------------------------------------------------------------------
   /** Main entry — mirrors `new Readability(documentClone).parse()`. */
-  def parse(docInput: DomDoc, documentUri: String): Option[Article] = {
-    new Run(docInput.deepClone(), documentUri).parse()
-  }
+  def parse(docInput: DomDoc, documentUri: String): Option[Article] =
+    new Run(docInput, documentUri).parse()
 
-  private final class Run(doc: DomDoc, documentUri: String) {
+  /** One parse over a private copy of `input`; the input is never mutated,
+    * and a retry re-copies it instead of holding a second copy up front. */
+  private final class Run(input: DomDoc, documentUri: String) {
+    private val doc = input.deepClone()
     private var flags = FlagStripUnlikelys | FlagWeightClasses | FlagCleanConditionally
     private def flagActive(f: Int): Boolean = (flags & f) != 0
     private def removeFlag(f: Int): Unit = flags &= ~f
@@ -652,8 +665,8 @@ object Readability {
 
     // ---- document prep ----
 
-    private def removeScripts(): Unit =
-      allTags(doc.html, Set("script", "noscript")).foreach(_.remove())
+    private def removeScripts(d: DomDoc): Unit =
+      allTags(d.html, Set("script", "noscript")).foreach(_.remove())
 
     /** `_isSingleImage` (readability.js): the node is an <img>, or a chain
       * of single-element-child wrappers with whitespace-only text ending in
@@ -677,8 +690,8 @@ object Readability {
       * builds noscript children as regular DOM (scripting-disabled
       * semantics, same as the reference's jsdom), so the reference's
       * innerHTML re-parse into a temp <div> is the identity here. */
-    private def unwrapNoscriptImages(): Unit = {
-      allTags(doc.html, Set("img")).foreach { img =>
+    private def unwrapNoscriptImages(d: DomDoc): Unit = {
+      allTags(d.html, Set("img")).foreach { img =>
         var keep = false
         img.attrs.foreach { case (k, v) =>
           if (k == "src" || k == "srcset" || k == "data-src" || k == "data-srcset") keep = true
@@ -686,7 +699,7 @@ object Readability {
         }
         if (!keep) img.remove()
       }
-      allTags(doc.html, Set("noscript")).foreach { noscript =>
+      allTags(d.html, Set("noscript")).foreach { noscript =>
         val inner = noscript.children.iterator.collect { case e: Element => e }.take(2).toList
         if (inner.length == 1 && textIsAllWs(noscript) && isSingleImage(inner.head)) {
           val prevElement = {
@@ -833,10 +846,19 @@ object Readability {
       }
     }
 
-    private def prepDocument(): Unit = {
-      allTags(doc.html, Set("style")).foreach(_.remove())
-      replaceBrs(doc.body)
-      allTags(doc.html, Set("font")).foreach(setNodeTag(_, "span"))
+    private def prepDocument(d: DomDoc): Unit = {
+      allTags(d.html, Set("style")).foreach(_.remove())
+      replaceBrs(d.body)
+      allTags(d.html, Set("font")).foreach(setNodeTag(_, "span"))
+    }
+
+    /** The document changes made before the first grab — and replayed on a
+      * fresh copy of the input for every retry. `unwrapNoscriptImages` goes
+      * before `removeScripts`, which deletes every <noscript>. */
+    private def prepare(d: DomDoc): Unit = {
+      unwrapNoscriptImages(d)
+      removeScripts(d)
+      prepDocument(d)
     }
 
     // ---- grab article ----
@@ -845,8 +867,6 @@ object Readability {
     private val attempts = mutable.ArrayBuffer.empty[Attempt]
 
     private def grabArticle(): Option[Element] = {
-      val pristineBody = doc.body.cloneElement()
-
       while (true) {
         val stripUnlikelyCandidates = flagActive(FlagStripUnlikelys)
         val elementsToScore = mutable.ArrayBuffer.empty[Element]
@@ -1074,10 +1094,12 @@ object Readability {
         var parseSuccessful = true
         if (textLength < CharThreshold) {
           parseSuccessful = false
-          // restore body for the next attempt
+          // restore the body for the next attempt: the input's body after
+          // the same pre-grab steps; head and body attributes stay as they are
+          val fresh = input.deepClone()
+          prepare(fresh)
           doc.body.children.clear()
-          val fresh = pristineBody.cloneElement()
-          while (fresh.children.nonEmpty) doc.body.appendChild(fresh.children.head)
+          while (fresh.body.children.nonEmpty) doc.body.appendChild(fresh.body.children.head)
           scores.clear()
 
           attempts += Attempt(articleContent, textLength)
@@ -1394,10 +1416,11 @@ object Readability {
     // ---- parse ----
 
     def parse(): Option[Article] = {
-      unwrapNoscriptImages() // before removeScripts deletes every <noscript>
+      // getJsonLd reads only ld+json <script>s, which prepare removes and
+      // unwrapNoscriptImages never touches (a script is never part of a
+      // single-image chain), so reading them first sees the same text
       val jsonLd = getJsonLd()
-      removeScripts()
-      prepDocument()
+      prepare(doc)
       val metadata = getArticleMetadata(jsonLd)
       articleTitle = metadata.title
 
@@ -1415,7 +1438,6 @@ object Readability {
         Article(
           title = articleTitle,
           byline = metadata.byline.orElse(articleByline),
-          content = articleContent.innerHtml,
           contentDom = articleContent,
           textContent = textContent,
           excerpt = excerpt,

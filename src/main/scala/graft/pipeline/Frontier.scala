@@ -112,8 +112,8 @@ object Frontier {
       .select("url", "host", "lastmod", "priority")
   }
 
-  /** One filter may hold at most 2^31 bits (256 MiB): the sketch is a
-    * DRIVER-side literal broadcast into the probe filter, so its size must
+  /** One filter may hold at most 2^31 bits (256 MiB): the sketch is built
+    * on the DRIVER and broadcast to the probe, so its size must
     * stay bounded no matter what `expectedSeen` a caller passes. 2^31 bits
     * covers ~3×10^8 items at 3% fpp; past that, [[unseenByBloom]] SHARDS
     * the seen-set by `pmod(xxhash64(url), k)` into k independently-sized
@@ -183,11 +183,10 @@ object Frontier {
     * `pmod(xxhash64(url), k)` ([[bloomShards]]): k filters built in ONE
     * grouped pass over the seen-set (each group's aggregate is still
     * map-side combinable), candidates probe only their own shard's filter
-    * via a CASE chain of foldable sketch literals — one probe per row, and
-    * per-shard sizing keeps the requested fpp up to
-    * [[MaxBloomShards]]-worth of cardinality. Past THAT (k >
-    * [[MaxBloomShards]], ~2.4×10^9 items at 3% fpp) the literal-sketch
-    * design itself stops scaling — see [[MaxBloomShards]] — and this
+    * — one probe per row, and per-shard sizing keeps the requested fpp up
+    * to [[MaxBloomShards]]-worth of cardinality. Past THAT (k >
+    * [[MaxBloomShards]], ~2.4×10^9 items at 3% fpp) resident sketches
+    * stop scaling — see [[MaxBloomShards]] — and this
     * method RETURNS THE PLAIN EXACT ANTI-JOIN (same output, no
     * prefilter) instead of building an infeasible plan. */
   def unseenByBloom(
@@ -196,8 +195,7 @@ object Frontier {
       urlCol: String = "url",
       expectedSeen: Long = 1L << 20,
       fpp: Double = 0.03,
-      shards: Int = 0,
-      probeViaBroadcast: Boolean = true): DataFrame = {
+      shards: Int = 0): DataFrame = {
     val spark = candidates.sparkSession
     graft.plans.GraftExtensions.registerNative(spark)
     val k = if (shards > 0) shards else bloomShards(expectedSeen, fpp)
@@ -254,41 +252,22 @@ object Frontier {
     // identical output (same sketch bytes, same xxhash64 input, same
     // mightContainLong bit test). A null url is not dropped: xxhash64(NULL)
     // is the seed, 42, so the row is probed like any other and, as the
-    // verify anti-join never matches a null key, kept by both forms and by
-    // the plain anti-join (FrontierBloomSpec pins it). The literal path is
-    // kept under `probeViaBroadcast = false` as the A/B evidence harness
-    // (FrontierBloomSpec pins output equality of the two forms).
-    val mightContain =
-      if (probeViaBroadcast) {
-        val bf = filters.map { case (s, bytes) =>
-          s -> org.apache.spark.util.sketch.BloomFilter.readFrom(
-            new java.io.ByteArrayInputStream(bytes))
-        }
-        val bc = spark.sparkContext.broadcast(bf)
-        val kL = k.toLong
-        val probe = udf { (h: java.lang.Long) =>
-          if (h == null) null.asInstanceOf[java.lang.Boolean]
-          else {
-            val f = bc.value.getOrElse(((h % kL) + kL) % kL, null)
-            java.lang.Boolean.valueOf(f != null && f.mightContainLong(h))
-          }
-        }.withName("bloom_shard_probe") // identifiable in plan audits
-        probe(xxhash64(col(urlCol)))
-      } else if (k == 1)
-        call_function("bloom_might_contain",
-          lit(filters(0L)), xxhash64(col(urlCol)))
+    // verify anti-join never matches a null key, kept by the probe and by
+    // the plain anti-join (FrontierBloomSpec pins it).
+    val bf = filters.map { case (s, bytes) =>
+      s -> org.apache.spark.util.sketch.BloomFilter.readFrom(
+        new java.io.ByteArrayInputStream(bytes))
+    }
+    val bc = spark.sparkContext.broadcast(bf)
+    val kL = k.toLong
+    val probe = udf { (h: java.lang.Long) =>
+      if (h == null) null.asInstanceOf[java.lang.Boolean]
       else {
-        // CASE over the row's own shard: exactly one sketch probe per row,
-        // each bloom_might_contain's filter argument a foldable literal
-        val shardOf = pmod(xxhash64(col(urlCol)), lit(k.toLong))
-        filters.toSeq.sortBy(_._1).foldLeft(lit(false)) {
-          case (acc, (s, bytes)) =>
-            when(shardOf === lit(s),
-              call_function("bloom_might_contain",
-                lit(bytes), xxhash64(col(urlCol))))
-              .otherwise(acc)
-        }
+        val f = bc.value.getOrElse(((h % kL) + kL) % kL, null)
+        java.lang.Boolean.valueOf(f != null && f.mightContainLong(h))
       }
+    }.withName("bloom_shard_probe") // identifiable in plan audits
+    val mightContain = probe(xxhash64(col(urlCol)))
     val definitelyUnseen = candidates.filter(!mightContain)
     val verified = candidates.filter(mightContain)
       .join(seen.select(col(urlCol).as("__seen_url")),

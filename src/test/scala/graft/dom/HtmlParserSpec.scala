@@ -125,4 +125,49 @@ class HtmlParserSpec extends AnyFunSuite {
     assert(doc.select("tr").length == 2)
     assert(doc.select("td").map(_.text()) == Vector("a", "b", "c"))
   }
+
+  test("end tag with a trailing slash closes its element") {
+    val doc = HtmlParser.parse("<div><span>a</span/>b</div>")
+    assert(doc.body.innerHtml == "<div><span>a</span>b</div>")
+    val doc2 = HtmlParser.parse("<div><span>a</span/ junk>b</div>")
+    assert(doc2.body.innerHtml == "<div><span>a</span>b</div>")
+  }
+
+  test("end tag: uppercase name and whitespace before '>'") {
+    val doc = HtmlParser.parse("<div><span>a</SPAN >b</div>")
+    assert(doc.body.innerHtml == "<div><span>a</span>b</div>")
+  }
+
+  test("uppercase and mixed-case tag and attribute names fold to lowercase") {
+    val doc = HtmlParser.parse("""<DIV CLASS="x" Data-Price="9"><SeCtIoN iD=s>t</sEcTiOn></DIV>""")
+    val div = doc.body.childElements.next()
+    assert(div.tag == "div")
+    assert(div.attr("class").contains("x") && div.attr("data-price").contains("9"))
+    val sec = div.childElements.next()
+    assert(sec.tag == "section" && sec.attr("id").contains("s") && sec.text() == "t")
+    // known names resolve to one shared instance per name
+    val doc2 = HtmlParser.parse("<div></div><DIV></DIV>")
+    val divs = doc2.body.childElements.toVector
+    assert(divs(0).tag eq divs(1).tag)
+  }
+
+  test("non-ASCII tag names keep Unicode case folding") {
+    val doc = HtmlParser.parse("<div><İMG src=x></İmg><x-ÉLAN>e</x-Élan>tail</div>")
+    val div = doc.body.childElements.next()
+    assert(div.childElements.map(_.tag).toVector == Vector("İMG".toLowerCase, "x-élan"))
+    // both end tags matched their start tags, so the tail is the div's own text
+    assert(div.children.last.asInstanceOf[TextNode].data == "tail")
+  }
+
+  test("attribute names outside the known set are lowercased copies") {
+    val doc = HtmlParser.parse("""<p Data-Zzq-Custom="1" ÑAME="2">x</p>""")
+    val p = doc.body.childElements.next()
+    assert(p.attr("data-zzq-custom").contains("1"))
+    assert(p.attr("ÑAME".toLowerCase).contains("2"))
+  }
+
+  test("text runs between markup keep every character and decode entities") {
+    val doc = HtmlParser.parse("a < b &amp; c <3 </ x<!--c-->d<?pi?>e<")
+    assert(doc.body.text() == "a < b & c <3 </ xde<")
+  }
 }

@@ -197,10 +197,9 @@ class FrontierBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Frontier.rawNumBits(perShardAtKminus1, 0.03) > Frontier.MaxBloomBits)
   }
 
-  test("broadcast probe == literal probe == exact path (r8 A/B, forced k=4)") {
-    // the r8 broadcast-variable probe must be bit-identical to the r7
-    // plan-literal CASE probe and to the exact anti-join — same sketches,
-    // same xxhash64 input, same mightContainLong test
+  test("broadcast probe == exact anti-join (forced k=4)") {
+    // the broadcast-variable probe over four shards must give exactly the
+    // exact anti-join's rows — no false negatives, every maybe verified
     val s = spark; import s.implicits._
     graft.plans.GraftExtensions.registerNative(spark)
     val cands = urls("bcast", 80)
@@ -210,13 +209,9 @@ class FrontierBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
         col("url") === col("u"), "left_anti")
       .select("url").collect().map(_.getString(0)).sorted.toSeq
     val viaBroadcast = Frontier.unseenByBloom(cands, seen, "url",
-        expectedSeen = 42, shards = 4, probeViaBroadcast = true)
-      .select("url").collect().map(_.getString(0)).sorted.toSeq
-    val viaLiterals = Frontier.unseenByBloom(cands, seen, "url",
-        expectedSeen = 42, shards = 4, probeViaBroadcast = false)
+        expectedSeen = 42, shards = 4)
       .select("url").collect().map(_.getString(0)).sorted.toSeq
     assert(viaBroadcast == exact)
-    assert(viaLiterals == exact)
   }
 
   test("null urls: xxhash64(NULL) is the seed, so null-url rows are probed and kept") {
@@ -229,13 +224,13 @@ class FrontierBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.select("url", "payload").collect().map(r => (Option(r.getString(0)), r.getLong(1)))
         .sortBy(_._2).toSeq
-    for (seenHasNull <- Seq(false, true); k <- Seq(1, 4); viaBroadcast <- Seq(true, false)) {
+    for (seenHasNull <- Seq(false, true); k <- Seq(1, 4)) {
       val seen = (if (seenHasNull) seenUrls :+ (null: String) else seenUrls).toDF("url")
       val exact = rows(cands.join(seen.select(col("url").as("u")),
         col("url") === col("u"), "left_anti"))
       val bloom = rows(Frontier.unseenByBloom(cands, seen, "url",
-        expectedSeen = 64L, shards = k, probeViaBroadcast = viaBroadcast))
-      val label = s"seenHasNull=$seenHasNull k=$k broadcast=$viaBroadcast"
+        expectedSeen = 64L, shards = k))
+      val label = s"seenHasNull=$seenHasNull k=$k"
       assert(bloom == exact, label)
       assert(bloom.count(_._1.isEmpty) == 2, s"null-url rows must be kept: $label")
     }
@@ -253,8 +248,8 @@ class FrontierBloomSpec extends AnyFunSuite with BeforeAndAfterAll {
         col("url") === col("u"), "left_anti")
       .select("url").collect().map(_.getString(0)).sorted.toSeq
     assert(out.select("url").collect().map(_.getString(0)).sorted.toSeq == exact)
-    // …and NO sketch literals in the plan (the infeasible-at-scale shape)
-    assert(!out.queryExecution.optimizedPlan.toString.contains("bloom_might_contain"))
+    // …and NO sketch probe in the plan (the infeasible-at-scale shape)
+    assert(!out.queryExecution.optimizedPlan.toString.contains("bloom_shard_probe"))
   }
 
   test("bloom_filter_agg / bloom_might_contain are reachable from SQL") {
