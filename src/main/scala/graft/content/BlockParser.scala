@@ -77,7 +77,7 @@ object BlockParser {
   private val defaultDropTags = Set("script", "style", "noscript", "iframe", "svg", "canvas")
   private def defaultDropMatch(e: Element): Boolean =
     defaultDropTags.contains(e.tag) || e.attrs.contains("hidden") ||
-      e.attr("aria-hidden").contains("true")
+      "true" == e.attrs.getOrNull("aria-hidden")
 
   private val containerSelector = Selector("article, main, [role=\"main\"], .content, #content")
   // == Selector("p, h1..h6, ul, ol, li, dt, dd, blockquote, pre, table").firstIn(el).isDefined
@@ -86,35 +86,41 @@ object BlockParser {
   private val blockChildTags = Set(
     "p", "h1", "h2", "h3", "h4", "h5", "h6", "ul", "ol", "li", "dt", "dd",
     "blockquote", "pre", "table")
-  private def hasBlockChild(el: Element): Boolean = {
-    val it = el.descendants
-    while (it.hasNext) if (blockChildTags.contains(it.next().tag)) return true
-    false
-  }
+  private def hasBlockChild(el: Element): Boolean =
+    el.firstDescendant(d => blockChildTags.contains(d.tag)) != null
   private val nonTypedBlockTags = Set("p", "div", "section", "article", "li", "dt", "dd", "figcaption")
   private val headingRe = "^h([1-6])$".r
 
-  /** Copy of `doc`'s tree without the subtrees `drop` matches (the root is
-    * never dropped), plus the copy of its body — the first `body` child of
-    * the root, as `DomDoc.deepClone` locates it, or the root if there is none.
+  /** The content container of a copy of `doc`'s tree without the subtrees
+    * `drop` matches (the root is never dropped): the first element of the
+    * copy below its root that [[containerSelector]] matches, in document
+    * order, or else the copy of the body — the first `body` child of the
+    * root, as `DomDoc.deepClone` locates it, or the root if there is none.
     * Drop matching reads only the element and its own subtree, which the
-    * source still holds intact, so this equals deep-cloning and then removing
-    * every match in document order. A dropped body is still copied (pruned,
-    * detached from the root): the removal left it as the fallback container. */
-  private def copyKept(doc: DomDoc, drop: Element => Boolean): (Element, Element) = {
+    * source still holds intact, so this equals deep-cloning, removing every
+    * match in document order and then running the selector. The copy is made
+    * in document order, so the container is found while copying. A dropped
+    * body is still copied (pruned, detached from the root): the removal left
+    * it as the fallback container, and nothing in it is a container
+    * candidate. */
+  private def copyKept(doc: DomDoc, drop: Element => Boolean): Element = {
     val srcBody = doc.html.childElements.find(_.tag == "body").orNull
     var body: Element = null
+    var container: Element = null
+    var detached = false
     def copy(e: Element): Element = {
       val c = new Element(e.tag)
       e.attrs.copyTo(c.attrs)
       if (e eq srcBody) body = c
+      if (container == null && !detached && (e ne doc.html) && containerSelector.matches(c))
+        container = c
       val ch = e.children
       var i = 0
       while (i < ch.length) {
         ch(i) match {
           case el: Element =>
             if (!drop(el)) c.appendChild(copy(el))
-            else if (el eq srcBody) copy(el)
+            else if (el eq srcBody) { detached = true; copy(el); detached = false }
           case n => c.appendChild(n.deepClone())
         }
         i += 1
@@ -122,7 +128,7 @@ object BlockParser {
       c
     }
     val html = copy(doc.html)
-    (html, if (body == null) html else body)
+    if (container != null) container else if (body != null) body else html
   }
 
   def parseBlocks(
@@ -136,25 +142,19 @@ object BlockParser {
     val drop: Element => Boolean =
       if (dropSelectors.isEmpty) defaultDropMatch
       else Selector((DefaultDropSelectors ++ dropSelectors).mkString(", ")).matches
-    val (html, body) = copyKept(doc, drop)
-    blocksIn(html, body, maxBlocks, includeHtml)
+    blocksIn(copyKept(doc, drop), maxBlocks, includeHtml)
   }
 
-  /** The blocks of an already-pruned copy: `html` its root, `body` the
-    * fallback container (possibly detached from `html`). */
+  /** The blocks below `container`, the content container of an already
+    * pruned copy. The walk stops at `maxBlocks` blocks. */
   private[content] def blocksIn(
-      html: Element,
-      body: Element,
+      container: Element,
       maxBlocks: Int,
       includeHtml: Boolean
   ): Vector[ContentBlock] = {
-    val container = containerSelector.firstIn(html).getOrElse(body)
-
     val blocks = Vector.newBuilder[ContentBlock]
     var count = 0
-    val it = container.descendants
-    while (it.hasNext && count < maxBlocks) {
-      val el = it.next()
+    if (maxBlocks > 0) container.firstDescendant { el =>
       val tagName = el.tag
 
       // type via ordered selector table (first match wins; fast tag dispatch
@@ -205,6 +205,7 @@ object BlockParser {
           }
         }
       }
+      count >= maxBlocks
     }
     blocks.result()
   }

@@ -83,10 +83,35 @@ final class AttrList {
     var i = 0
     while (i < n) { f((kv(2 * i), kv(2 * i + 1))); i += 1 }
   }
-  /** `foreach { case (k, v) => dst(k) = v }` without a tuple per pair. */
+  /** Fills this EMPTY list from the first `count` interleaved pairs of
+    * `src`, the first pair of each name winning (`update`-if-absent per
+    * pair), with one array allocation. */
+  private[dom] def fillFirstWins(src: Array[String], count: Int): Unit = {
+    require(n == 0, "fillFirstWins needs an empty list")
+    if (count > 0) {
+      val out = new Array[String](2 * count)
+      var k = 0
+      var i = 0
+      while (i < count) {
+        val key = src(2 * i)
+        var j = 0
+        while (j < k && out(2 * j) != key) j += 1
+        if (j == k) { out(2 * k) = key; out(2 * k + 1) = src(2 * i + 1); k += 1 }
+        i += 1
+      }
+      kv = if (k == count) out else java.util.Arrays.copyOf(out, 2 * k)
+      n = k
+    }
+  }
+
+  /** Copies the pairs into an empty `dst`. They are distinct already, so
+    * the array is copied as it is, with no per-pair duplicate search. */
   def copyTo(dst: AttrList): Unit = {
-    var i = 0
-    while (i < n) { dst(kv(2 * i)) = kv(2 * i + 1); i += 1 }
+    require(dst.n == 0, "copyTo needs an empty destination")
+    if (n > 0) {
+      dst.kv = java.util.Arrays.copyOf(kv, 2 * n)
+      dst.n = n
+    }
   }
   def values: Iterator[String] = (0 until n).iterator.map(i => kv(2 * i + 1))
   def size: Int = n
@@ -164,35 +189,24 @@ final class Element(val tag: String) extends Node {
     }
   }
 
-  /** All descendant elements in document order (self excluded) — cheerio
-    * `find('*')`. Element-only manual array stack: this iterator runs for
-    * every selector scan / allTags call, so no per-node Iterator allocs. */
-  def descendants: Iterator[Element] = new Iterator[Element] {
-    private var stack = new Array[Element](16)
-    private var top = 0
-    pushChildrenOf(Element.this)
-    private def pushChildrenOf(e: Element): Unit = {
-      val ch = e.children
-      var i = ch.length - 1
-      while (i >= 0) {
-        ch(i) match {
-          case el: Element =>
-            if (top == stack.length) stack = java.util.Arrays.copyOf(stack, top * 2)
-            stack(top) = el
-            top += 1
-          case _ =>
-        }
-        i -= 1
-      }
-    }
-    def hasNext: Boolean = top > 0
-    def next(): Element = {
-      top -= 1
-      val e = stack(top)
-      stack(top) = null
-      pushChildrenOf(e)
-      e
-    }
+  // ---- walks over the descendant elements ----
+  // Pre-order, document order, self excluded — cheerio `find('*')`. They
+  // recurse (faster than an iterator over an explicit stack), and go on over
+  // an explicit stack below `Element.MaxWalkRecursion` levels, so no tree
+  // depth overflows the thread stack. The callback must not insert, move or
+  // detach elements: collect first, then mutate.
+
+  /** Calls `f` on every descendant element. */
+  def foreachDescendant(f: Element => Unit): Unit = Element.visit(this, f, 0)
+
+  /** The first descendant element `p` accepts, or null; stops there. */
+  def firstDescendant(p: Element => Boolean): Element = Element.first(this, p, 0)
+
+  /** The descendant elements `p` accepts. */
+  def descendantsWhere(p: Element => Boolean): mutable.ArrayBuffer[Element] = {
+    val out = new mutable.ArrayBuffer[Element](16)
+    foreachDescendant(e => if (p(e)) out += e)
+    out
   }
 
   /** Ancestors from nearest parent to root — cheerio `parents()` order. */
@@ -248,12 +262,11 @@ final class Element(val tag: String) extends Node {
   def classList: Array[String] = attrs.get("class") match {
     case None => Element.emptyClassList
     case Some(c) =>
-      def isWs(ch: Char) = ch == ' ' || ch == '\t' || ch == '\n' || ch == '\u000b' || ch == '\f' || ch == '\r'
       var count = 0
       var i = 0
       val n = c.length
       while (i < n) {
-        if (!isWs(c.charAt(i)) && (i == 0 || isWs(c.charAt(i - 1)))) count += 1
+        if (!Element.isClassWs(c.charAt(i)) && (i == 0 || Element.isClassWs(c.charAt(i - 1)))) count += 1
         i += 1
       }
       if (count == 0) return Element.emptyClassList
@@ -261,15 +274,31 @@ final class Element(val tag: String) extends Node {
       var k = 0
       i = 0
       while (i < n) {
-        if (isWs(c.charAt(i))) i += 1
+        if (Element.isClassWs(c.charAt(i))) i += 1
         else {
           val s = i
-          while (i < n && !isWs(c.charAt(i))) i += 1
+          while (i < n && !Element.isClassWs(c.charAt(i))) i += 1
           out(k) = c.substring(s, i)
           k += 1
         }
       }
       out
+  }
+
+  /** `classList.contains(cls)` without splitting: some whitespace-delimited
+    * token of `class` equals `cls`, a name without whitespace (selector class
+    * names never hold any). */
+  def hasClass(cls: String): Boolean = {
+    val c = attrs.getOrNull("class")
+    if (c == null || cls.isEmpty) return false
+    val m = cls.length
+    var from = c.indexOf(cls)
+    while (from >= 0) {
+      if ((from == 0 || Element.isClassWs(c.charAt(from - 1))) &&
+          (from + m == c.length || Element.isClassWs(c.charAt(from + m)))) return true
+      from = c.indexOf(cls, from + 1)
+    }
+    false
   }
 
   def deepClone(): Node = {
@@ -353,9 +382,6 @@ object HtmlSerializer {
 
 /** A parsed document: implied `<html><head/><body/></html>` skeleton. */
 final class DomDoc(val html: Element, val head: Element, val body: Element) {
-  /** All elements in document order (from the html root, inclusive of head+body). */
-  def allElements: Iterator[Element] = Iterator.single(html) ++ html.descendants
-
   def select(selector: String): Vector[Element] = Selector(selector).findIn(html)
 
   def selectFirst(selector: String): Option[Element] = Selector(selector).firstIn(html)
@@ -376,4 +402,70 @@ final class DomDoc(val html: Element, val head: Element, val body: Element) {
 
 object Element {
   private[dom] val emptyClassList = new Array[String](0)
+
+  private def isClassWs(ch: Char): Boolean =
+    ch == ' ' || ch == '\t' || ch == '\n' || ch == '\u000b' || ch == '\f' || ch == '\r'
+
+  /** Walk depth past which the descendant walks leave recursion for an
+    * explicit stack. HTML trees stay far below it (the parser caps nesting
+    * at `HtmlParser.MaxTreeDepth`); XML trees have no cap. */
+  private val MaxWalkRecursion = 1024
+
+  private def visit(e: Element, f: Element => Unit, depth: Int): Unit =
+    if (depth == MaxWalkRecursion) firstOnStack(e, { d => f(d); false })
+    else {
+      val ch = e.children
+      var i = 0
+      while (i < ch.length) {
+        ch(i) match {
+          case el: Element =>
+            f(el)
+            visit(el, f, depth + 1)
+          case _ =>
+        }
+        i += 1
+      }
+    }
+
+  private def first(e: Element, p: Element => Boolean, depth: Int): Element =
+    if (depth == MaxWalkRecursion) firstOnStack(e, p)
+    else {
+      val ch = e.children
+      var i = 0
+      while (i < ch.length) {
+        ch(i) match {
+          case el: Element =>
+            if (p(el)) return el
+            val hit = first(el, p, depth + 1)
+            if (hit != null) return hit
+          case _ =>
+        }
+        i += 1
+      }
+      null
+    }
+
+  /** [[first]] over an explicit stack: pushing the children in reverse keeps
+    * document order. */
+  private def firstOnStack(root: Element, p: Element => Boolean): Element = {
+    val stack = new java.util.ArrayDeque[Element]()
+    def pushChildrenOf(e: Element): Unit = {
+      val ch = e.children
+      var i = ch.length - 1
+      while (i >= 0) {
+        ch(i) match {
+          case el: Element => stack.push(el)
+          case _ =>
+        }
+        i -= 1
+      }
+    }
+    pushChildrenOf(root)
+    while (!stack.isEmpty) {
+      val e = stack.pop()
+      if (p(e)) return e
+      pushChildrenOf(e)
+    }
+    null
+  }
 }

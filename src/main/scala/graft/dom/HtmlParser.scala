@@ -64,7 +64,7 @@ object HtmlParser {
     * with StackOverflowError — an Error, which escapes every per-row
     * Exception containment and kills the Spark task — and (b) turns the
     * per-tag open-stack scans (implied-close rules) quadratic. */
-  private val MaxTreeDepth = 512
+  private[dom] val MaxTreeDepth = 512
 
   /** Attributes kept per start tag: a 50k-attribute tag is markup-bomb
     * input (measured 49 s in the duplicate-name check alone); keep the
@@ -86,6 +86,8 @@ object HtmlParser {
     * tag was a measured allocation hotspot). */
   private final class TagScratch {
     var tag: String = ""
+    /** The start-tag flags (`FlagVoid` …) of `tag`. */
+    var flags = 0
     var selfClosing = false
     var next = 0
     var n = 0
@@ -98,6 +100,8 @@ object HtmlParser {
     }
     def key(i: Int): String = kv(2 * i)
     def value(i: Int): String = kv(2 * i + 1)
+    /** The interleaved `[k0, v0, k1, v1, …]` pairs; the first `n` are set. */
+    def pairs: Array[String] = kv
   }
 
   /** HTML element names, common attribute names and the attributes the
@@ -118,6 +122,7 @@ object HtmlParser {
     "svg", "table", "tbody", "td", "template", "textarea", "tfoot", "th", "thead", "time",
     "title", "tr", "track", "tt", "u", "ul", "var", "video", "wbr", "xmp",
     "circle", "defs", "g", "line", "path", "polygon", "polyline", "rect", "symbol", "use",
+    "basefont", "bgsound",
     // attributes
     "id", "class", "href", "src", "srcset", "sizes", "rel", "type", "name",
     "content", "property", "itemprop", "itemscope", "itemtype", "lang", "charset",
@@ -129,6 +134,21 @@ object HtmlParser {
     "tabindex", "xmlns", "viewbox", "fill", "d", "onclick", "onload", "data-src",
     "data-srcset", "data-price", "data-ad")
 
+  // the start-tag flags: which of the tag sets above hold the name
+  private val FlagVoid = 1
+  private val FlagRawText = 2
+  private val FlagRcdata = 4
+  private val FlagPCloser = 8
+  private val FlagHead = 16
+
+  /** The start-tag flags of a lowercased tag name, from the sets. */
+  private def setFlags(tag: String): Int =
+    (if (voidElements.contains(tag)) FlagVoid else 0) |
+      (if (rawTextTags.contains(tag)) FlagRawText else 0) |
+      (if (rcdataTags.contains(tag)) FlagRcdata else 0) |
+      (if (pClosers.contains(tag)) FlagPCloser else 0) |
+      (if (headTags.contains(tag)) FlagHead else 0)
+
   private val NameSlotMask = 1023
   private val nameTable: Array[String] = {
     val t = new Array[String](NameSlotMask + 1)
@@ -139,32 +159,63 @@ object HtmlParser {
     }
     t
   }
+  /** [[setFlags]] of each [[nameTable]] entry. Every member of the tag sets
+    * is in the table, so a name that misses it is in none of them unless
+    * Unicode lowercasing made it ASCII (the Kelvin sign `K` lowercases to
+    * `k`); such names keep the set path. */
+  private val nameFlags: Array[Int] = nameTable.map(nm => if (nm == null) 0 else setFlags(nm))
   private def nameSlot(h: Int): Int = (h ^ (h >>> 16)) & NameSlotMask
 
-  /** `s.substring(from, to).toLowerCase` without the copy for the names in
-    * [[knownNames]]: the hash is taken over the ASCII-lowercased chars and
-    * probed in an open-addressed table, so a hit allocates nothing. Non-ASCII
-    * and unknown names take the substring path, so Unicode case folding
-    * (`İ` and the like) is unchanged. ASCII folding on a hit is
-    * locale-independent. */
-  private def canonicalName(s: String, from: Int, to: Int): String = {
+  /** The [[nameTable]] slot of the ASCII-lowercased `s[from, to)`, or -1
+    * when it is not a known name or holds a non-ASCII char. The hash is
+    * taken over the lowercased chars and probed in an open-addressed table,
+    * so a hit allocates nothing. */
+  private def nameSlotOf(s: String, from: Int, to: Int): Int = {
     var h = 0
     var k = from
     while (k < to) {
       val c = s.charAt(k)
-      if (c >= 0x80) return s.substring(from, to).toLowerCase
+      if (c >= 0x80) return -1
       h = 31 * h + (if (c >= 'A' && c <= 'Z') c + 32 else c)
       k += 1
     }
     var slot = nameSlot(h)
     var cand = nameTable(slot)
     while (cand != null) {
-      if (cand.length == to - from && isAsciiLowerOf(cand, s, from)) return cand
+      if (cand.length == to - from && isAsciiLowerOf(cand, s, from)) return slot
       slot = (slot + 1) & NameSlotMask
       cand = nameTable(slot)
     }
-    s.substring(from, to).toLowerCase
+    -1
   }
+
+  /** `s.substring(from, to).toLowerCase` without the copy for the names in
+    * [[knownNames]]. Non-ASCII and unknown names take the substring path, so
+    * Unicode case folding (`İ` and the like) is unchanged. ASCII folding on
+    * a hit is locale-independent. */
+  private def canonicalName(s: String, from: Int, to: Int): String = {
+    val slot = nameSlotOf(s, from, to)
+    if (slot >= 0) nameTable(slot) else s.substring(from, to).toLowerCase
+  }
+
+  /** Sets `out.tag` to the canonical name of `s[from, to)` and `out.flags`
+    * to its start-tag flags: one table probe for a known name. */
+  private def setStartTag(s: String, from: Int, to: Int, out: TagScratch): Unit = {
+    val slot = nameSlotOf(s, from, to)
+    if (slot >= 0) { out.tag = nameTable(slot); out.flags = nameFlags(slot) }
+    else { out.tag = s.substring(from, to).toLowerCase; out.flags = setFlags(out.tag) }
+  }
+
+  /** `Character.isWhitespace`, with an ASCII fast path. */
+  private def isWs(c: Char): Boolean =
+    if (c < 0x80) c == ' ' || (c >= '\t' && c <= '\r') || (c >= '\u001c' && c <= '\u001f')
+    else Character.isWhitespace(c)
+
+  /** `Character.isLetterOrDigit(c) || c == '-' || c == ':'`, with an ASCII
+    * fast path: a start-tag name char. */
+  private def isTagNameChar(c: Char): Boolean =
+    if (c < 0x80) (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9') || c == '-' || c == ':'
+    else Character.isLetterOrDigit(c)
 
   /** `lower` equals the ASCII-lowercased `s[from, from + lower.length)`. */
   private def isAsciiLowerOf(lower: String, s: String, from: Int): Boolean = {
@@ -239,11 +290,8 @@ object HtmlParser {
       false
     }
 
-    def closeImplied(tag: String): Unit = {
-      tag match {
-        case t if pClosers.contains(t) => closePUpTo()
-        case _ =>
-      }
+    def closeImplied(tag: String, flags: Int): Unit = {
+      if ((flags & FlagPCloser) != 0) closePUpTo()
       tag match {
         case "li" =>
           val idx = lastIndexOfTag("li", "li")
@@ -289,13 +337,13 @@ object HtmlParser {
           return
         case _ =>
       }
-      if (!inBody && stack.isEmpty && !headTags.contains(tag)) switchToBody()
-      closeImplied(tag)
+      if (!inBody && stack.isEmpty && (t.flags & FlagHead) == 0) switchToBody()
+      closeImplied(tag, t.flags)
       if (current.children.length >= MaxChildrenPerElement) return // fan-out bomb: drop
       val el = new Element(tag)
-      setAttrsFrom(el, t)
+      el.attrs.fillFirstWins(t.pairs, t.n)
       current.appendChild(el)
-      if (!voidElements.contains(tag) && !selfClosing && stack.length < MaxTreeDepth)
+      if ((t.flags & FlagVoid) == 0 && !selfClosing && stack.length < MaxTreeDepth)
         stack += el
       // foreign content self-closing (<svg/>) respected via selfClosing flag
     }
@@ -321,8 +369,11 @@ object HtmlParser {
       if (i > textStart) appendText(Entities.decode(html.substring(textStart, i)))
 
     while (i < n) {
-      val c = html.charAt(i)
-      if (c == '<' && i + 1 < n) {
+      if (html.charAt(i) != '<') {
+        // a text run: jump to the next markup candidate
+        val lt = html.indexOf('<', i)
+        i = if (lt < 0) n else lt
+      } else if (i + 1 < n) {
         val c1 = html.charAt(i + 1)
         if (c1 == '!') {
           flushText()
@@ -352,7 +403,7 @@ object HtmlParser {
             // the name ends at whitespace, '/' or '>' (HTML5 end-tag name
             // state), so `</span/>` closes the span; the rest up to '>' is skipped
             var j = i + 2
-            while (j < n && !Character.isWhitespace(html.charAt(j)) && html.charAt(j) != '/' && html.charAt(j) != '>') j += 1
+            while (j < n && !isWs(html.charAt(j)) && html.charAt(j) != '/' && html.charAt(j) != '>') j += 1
             endTag(canonicalName(html, i + 2, j))
             while (j < n && html.charAt(j) != '>') j += 1
             i = if (j < n) j + 1 else n
@@ -362,14 +413,15 @@ object HtmlParser {
           flushText()
           parseStartTag(html, i, scratch)
           val tag = scratch.tag
+          val rcdata = (scratch.flags & FlagRcdata) != 0
           i = scratch.next
-          if (rawTextTags.contains(tag) || rcdataTags.contains(tag)) {
+          if (rcdata || (scratch.flags & FlagRawText) != 0) {
             // consume raw content until matching end tag
             val endIdx = findEndTag(html, i, tag)
             val content = html.substring(i, endIdx)
             startTag(scratch, selfClosing = false)
             if (content.nonEmpty && current.children.length < MaxChildrenPerElement) {
-              val data = if (rcdataTags.contains(tag)) Entities.decode(content) else content
+              val data = if (rcdata) Entities.decode(content) else content
               current.appendChild(new TextNode(data))
             }
             endTag(tag)
@@ -395,14 +447,14 @@ object HtmlParser {
     val n = s.length
     var i = start + 1
     val nameStart = i
-    while (i < n && (Character.isLetterOrDigit(s.charAt(i)) || s.charAt(i) == '-' || s.charAt(i) == ':')) i += 1
+    while (i < n && isTagNameChar(s.charAt(i))) i += 1
     out.clear()
-    out.tag = canonicalName(s, nameStart, i)
+    setStartTag(s, nameStart, i, out)
     var selfClosing = false
     var done = false
     while (!done && i < n) {
       // skip whitespace and stray slashes (not before '>')
-      while (i < n && (Character.isWhitespace(s.charAt(i)))) i += 1
+      while (i < n && isWs(s.charAt(i))) i += 1
       if (i >= n) { done = true }
       else s.charAt(i) match {
         case '>' => i += 1; done = true
@@ -412,22 +464,23 @@ object HtmlParser {
         case _ =>
           // attribute name
           val as = i
-          while (i < n && !Character.isWhitespace(s.charAt(i)) && s.charAt(i) != '=' && s.charAt(i) != '>' && s.charAt(i) != '/') i += 1
+          while (i < n && !isWs(s.charAt(i)) && s.charAt(i) != '=' && s.charAt(i) != '>' && s.charAt(i) != '/') i += 1
           val name = canonicalName(s, as, i)
-          while (i < n && Character.isWhitespace(s.charAt(i))) i += 1
+          while (i < n && isWs(s.charAt(i))) i += 1
           var value = ""
           if (i < n && s.charAt(i) == '=') {
             i += 1
-            while (i < n && Character.isWhitespace(s.charAt(i))) i += 1
+            while (i < n && isWs(s.charAt(i))) i += 1
             if (i < n && (s.charAt(i) == '"' || s.charAt(i) == '\'')) {
               val q = s.charAt(i); i += 1
               val vs = i
-              while (i < n && s.charAt(i) != q) i += 1
+              val end = s.indexOf(q, i)
+              i = if (end < 0) n else end
               value = Entities.decode(s.substring(vs, i), inAttribute = true)
               if (i < n) i += 1
             } else {
               val vs = i
-              while (i < n && !Character.isWhitespace(s.charAt(i)) && s.charAt(i) != '>') i += 1
+              while (i < n && !isWs(s.charAt(i)) && s.charAt(i) != '>') i += 1
               value = Entities.decode(s.substring(vs, i), inAttribute = true)
             }
           }
@@ -455,13 +508,14 @@ object HtmlParser {
     n
   }
 
+  /** `needle` starts with '<': candidates are found with `indexOf('<')`. */
   private def indexOfIgnoreCase(s: String, needle: String, from: Int): Int = {
     val n = s.length
     val m = needle.length
-    var i = from
-    while (i + m <= n) {
+    var i = s.indexOf('<', from)
+    while (i >= 0 && i + m <= n) {
       if (s.regionMatches(true, i, needle, 0, m)) return i
-      i += 1
+      i = s.indexOf('<', i + 1)
     }
     -1
   }

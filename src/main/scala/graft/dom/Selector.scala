@@ -26,17 +26,11 @@ final case class Selector(groups: Vector[Selector.Compound]) {
   }
 
   /** Descendants of `root` matching, in document order (root excluded) — cheerio `find`. */
-  def findIn(root: Element): Vector[Element] =
-    root.descendants.filter(matches).toVector
+  def findIn(root: Element): Vector[Element] = root.descendantsWhere(matches).toVector
 
-  def firstIn(root: Element): Option[Element] = {
-    val it = root.descendants
-    while (it.hasNext) {
-      val e = it.next()
-      if (matches(e)) return Some(e)
-    }
-    None
-  }
+  /** The first descendant of `root` matching, in document order; the walk
+    * stops there. */
+  def firstIn(root: Element): Option[Element] = Option(root.firstDescendant(matches))
 
   /** Nearest ancestor-or-self matching — cheerio `closest`. */
   def closest(e: Element): Option[Element] = {
@@ -57,26 +51,27 @@ object Selector {
   final case class TagIs(tag: String) extends Pred {
     def matches(e: Element): Boolean = e.tag == tag
   }
+  // the attribute predicates read `getOrNull`: no Option per probe
   final case class IdIs(id: String) extends Pred {
-    def matches(e: Element): Boolean = e.attr("id").contains(id)
+    def matches(e: Element): Boolean = id == e.attrs.getOrNull("id")
   }
   final case class HasClass(cls: String) extends Pred {
-    def matches(e: Element): Boolean = e.classList.contains(cls)
+    def matches(e: Element): Boolean = e.hasClass(cls)
   }
   final case class AttrPresent(name: String) extends Pred {
     def matches(e: Element): Boolean = e.attrs.contains(name)
   }
   final case class AttrEq(name: String, value: String) extends Pred {
-    def matches(e: Element): Boolean = e.attr(name).contains(value)
+    def matches(e: Element): Boolean = value == e.attrs.getOrNull(name)
   }
   final case class AttrContains(name: String, value: String) extends Pred {
-    def matches(e: Element): Boolean = e.attr(name).exists(_.contains(value))
+    def matches(e: Element): Boolean = { val v = e.attrs.getOrNull(name); v != null && v.contains(value) }
   }
   final case class AttrStarts(name: String, value: String) extends Pred {
-    def matches(e: Element): Boolean = e.attr(name).exists(_.startsWith(value))
+    def matches(e: Element): Boolean = { val v = e.attrs.getOrNull(name); v != null && v.startsWith(value) }
   }
   final case class AttrEnds(name: String, value: String) extends Pred {
-    def matches(e: Element): Boolean = e.attr(name).exists(_.endsWith(value))
+    def matches(e: Element): Boolean = { val v = e.attrs.getOrNull(name); v != null && v.endsWith(value) }
   }
   final case class ContainsText(text: String) extends Pred {
     def matches(e: Element): Boolean = e.text().contains(text)

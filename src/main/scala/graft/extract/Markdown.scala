@@ -277,7 +277,7 @@ object Markdown {
   private def isBlankNode(e: Element): Boolean =
     !isVoid(e) && !meaningfulWhenBlank.contains(e.tag) &&
       textIsJavaWsOnly(e) &&
-      !e.descendants.exists(d => isVoid(d) || meaningfulWhenBlank.contains(d.tag))
+      e.firstDescendant(d => isVoid(d) || meaningfulWhenBlank.contains(d.tag)) == null
 
   private def replacementFor(e: Element): String = {
     if (removedTags.contains(e.tag)) return ""

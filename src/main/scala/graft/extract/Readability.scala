@@ -89,6 +89,10 @@ object Readability {
     "^(Article|AdvertiserContentArticle|NewsArticle|AnalysisNewsArticle|AskPublicNewsArticle|BackgroundNewsArticle|OpinionNewsArticle|ReportageNewsArticle|ReviewNewsArticle|Report|SatiricalArticle|ScholarlyArticle|MedicalScholarlyArticle|SocialMediaPosting|BlogPosting|LiveBlogPosting|DiscussionForumPosting|TechArticle|APIReference)$")
   private val jsonLdMapper = new com.fasterxml.jackson.databind.ObjectMapper()
   private[extract] val nonWordRe = Pattern.compile("\\W+")
+  private val metaPropertyRe = Pattern.compile(
+    "\\s*(article|dc|dcterm|og|twitter)\\s*:\\s*(author|creator|pub_date|description|title|site_name)\\s*", Pattern.CASE_INSENSITIVE)
+  private val metaNameRe = Pattern.compile(
+    "^\\s*(?:(dc|dcterm|og|twitter|parsely|weibo:(article|webpage))\\s*[-\\.:]\\s*)?(author|creator|pub-date|description|title|site_name)\\s*$", Pattern.CASE_INSENSITIVE)
 
   // ---- literal-alternation fast paths ----
   // Java CASE_INSENSITIVE (without UNICODE_CASE) folds ASCII only, so for a
@@ -168,6 +172,136 @@ object Readability {
     "script", "select", "small", "span", "strong", "sub", "sup", "textarea", "time", "var", "wbr")
   private val presentationalAttributes = Seq("align", "background", "bgcolor", "border", "cellpadding", "cellspacing", "frame", "hspace", "rules", "style", "valign", "vspace")
   private val deprecatedSizeAttributeElems = Set("table", "th", "td", "hr", "pre")
+  private val mediaInParaTags = Set("img", "embed", "object", "iframe")
+
+  /** `innerText(e).length` without materializing the string: an inner
+    * JS-ws run of any length contributes exactly 1; edge runs contribute 0. */
+  private def innerTextLength(e: Element): Int = {
+    var len = 0
+    var wsLen = 0
+    def walk(el: Element): Unit = {
+      val ch = el.children
+      var i = 0
+      while (i < ch.length) {
+        ch(i) match {
+          case t: TextNode =>
+            val d = t.data
+            var j = 0
+            while (j < d.length) {
+              if (Js.isJsWs(d.charAt(j))) wsLen += 1
+              else { if (wsLen > 0 && len > 0) len += 1; wsLen = 0; len += 1 }
+              j += 1
+            }
+          case e2: Element => walk(e2)
+          case _ =>
+        }
+        i += 1
+      }
+    }
+    walk(e)
+    len
+  }
+
+  /** An `<a>`'s weighted text length in the link density. hashUrl =
+    * /^#.+/ (readability.js): a bare href="#" does NOT qualify for the 0.3
+    * coefficient — at least one char after '#'. */
+  private def linkTextLength(a: Element): Double = {
+    val coeff =
+      if (a.attr("href").exists(h => h.length > 1 && h.startsWith("#"))) 0.3 else 1.0
+    innerTextLength(a) * coeff
+  }
+
+  /** `anc` is a proper ancestor of `e`: with `anc` a document root, `e` is
+    * still attached to that document. */
+  private def isUnder(e: Element, anc: Element): Boolean = {
+    var p = e.parent
+    while (p != null) {
+      if (p eq anc) return true
+      p = p.parent
+    }
+    false
+  }
+
+  /** What [[cleanConditionally]] reads of a node's subtree, from one walk:
+    * the p/img/li/input counts, the object/embed/iframe count (`embeds`,
+    * video embeds apart), and the text lengths of its lists, headings and
+    * links. A list inside a list counts with both, as a walk per tag did. */
+  private[graft] final class SubtreeCounts(node: Element) {
+    var p, img, li, input, embeds = 0
+    var videoEmbed = false
+    var listLength = 0.0
+    var headingLength = 0
+    var linkLength = 0.0
+    node.foreachDescendant { e =>
+      e.tag match {
+        case "p" => p += 1
+        case "img" => img += 1
+        case "li" => li += 1
+        case "input" => input += 1
+        case "object" | "embed" | "iframe" =>
+          if (videosRe.matcher(e.attrs.values.mkString("|")).find()) videoEmbed = true
+          else embeds += 1
+        case "ul" | "ol" => listLength += innerTextLength(e)
+        case "h1" | "h2" | "h3" | "h4" | "h5" | "h6" => headingLength += innerTextLength(e)
+        case "a" => linkLength += linkTextLength(e)
+        case _ =>
+      }
+    }
+  }
+
+  /** Where the pre-grab steps take their elements from, in document order;
+    * each list is read when its step starts. */
+  private[graft] trait PrepSource {
+    def imgs: Iterable[Element]
+    def noscripts: Iterable[Element]
+    /** `<script>`s and `<noscript>`s: the script removal takes both. */
+    def scripts: Iterable[Element]
+    def styles: Iterable[Element]
+    /** The `<br>`s below the body. */
+    def bodyBrs: Iterable[Element]
+    def fonts: Iterable[Element]
+  }
+
+  /** The pre-grab elements of a copy from ONE walk of it; a read skips the
+    * elements an earlier step detached. That equals a fresh walk per step,
+    * in the same order: no step creates an element of a later step's tags,
+    * and the one move before the font step, the noscript unwrap, puts a
+    * single-image chain (no script, style or br) in the place of the
+    * noscript's previous element sibling, past no other element. The
+    * `<meta>`s, read after the steps, come from the same walk. */
+  private[graft] final class PrepLists(d: DomDoc) extends PrepSource {
+    private val imgs0, noscripts0, scripts0, styles0, brs0, fonts0, metas0 =
+      new mutable.ArrayBuffer[Element]
+    d.html.foreachDescendant { e =>
+      e.tag match {
+        case "img" => imgs0 += e
+        case "noscript" => noscripts0 += e; scripts0 += e
+        case "script" => scripts0 += e
+        case "style" => styles0 += e
+        case "br" => brs0 += e
+        case "font" => fonts0 += e
+        case "meta" => metas0 += e
+        case _ =>
+      }
+    }
+    private def attached(l: mutable.ArrayBuffer[Element]) = l.filter(isUnder(_, d.html))
+    def imgs: Iterable[Element] = attached(imgs0)
+    def noscripts: Iterable[Element] = attached(noscripts0)
+    def scripts: Iterable[Element] = attached(scripts0)
+    def styles: Iterable[Element] = attached(styles0)
+    def bodyBrs: Iterable[Element] = brs0.filter(isUnder(_, d.body))
+    def fonts: Iterable[Element] = attached(fonts0)
+    def metas: Iterable[Element] = attached(metas0)
+  }
+
+  /** A copy of `doc` after the pre-grab steps, each step taking its elements
+    * from `source` (the seam that checks [[PrepLists]] against a fresh walk
+    * per step). */
+  private[graft] def prepared(doc: DomDoc, source: DomDoc => PrepSource): DomDoc = {
+    val run = new Run(doc, "")
+    run.prepare(source(run.doc))
+    run.doc
+  }
 
   // ------------------------------------------------------------------
   /** Main entry — mirrors `new Readability(documentClone).parse()`. */
@@ -177,7 +311,7 @@ object Readability {
   /** One parse over a private copy of `input`; the input is never mutated,
     * and a retry re-copies it instead of holding a second copy up front. */
   private final class Run(input: DomDoc, documentUri: String) {
-    private val doc = input.deepClone()
+    private[Readability] val doc = input.deepClone()
     private var flags = FlagStripUnlikelys | FlagWeightClasses | FlagCleanConditionally
     private def flagActive(f: Int): Boolean = (flags & f) != 0
     private def removeFlag(f: Int): Unit = flags &= ~f
@@ -227,34 +361,6 @@ object Readability {
       sb.toString // pending trailing ws intentionally dropped (trim)
     }
 
-    /** `innerText(e).length` without materializing the string: an inner
-      * JS-ws run of any length contributes exactly 1; edge runs contribute 0. */
-    private def innerTextLength(e: Element): Int = {
-      var len = 0
-      var wsLen = 0
-      def walk(el: Element): Unit = {
-        val ch = el.children
-        var i = 0
-        while (i < ch.length) {
-          ch(i) match {
-            case t: TextNode =>
-              val d = t.data
-              var j = 0
-              while (j < d.length) {
-                if (Js.isJsWs(d.charAt(j))) wsLen += 1
-                else { if (wsLen > 0 && len > 0) len += 1; wsLen = 0; len += 1 }
-                j += 1
-              }
-            case e2: Element => walk(e2)
-            case _ =>
-          }
-          i += 1
-        }
-      }
-      walk(e)
-      len
-    }
-
     /** `Js.trim(e.text()).isEmpty` with early exit — true iff every text
       * char is JS whitespace. */
     private def textIsAllWs(e: Element): Boolean = {
@@ -274,16 +380,8 @@ object Readability {
       true
     }
 
-    private def allTags(root: Element, tags: Set[String]): scala.collection.IndexedSeq[Element] = {
-      // manual collect — iterator.filter.toVector allocated per call on a hot path
-      val out = new scala.collection.mutable.ArrayBuffer[Element](16)
-      val it = root.descendants
-      while (it.hasNext) {
-        val e = it.next()
-        if (tags.contains(e.tag)) out += e
-      }
-      out
-    }
+    private def allTags(root: Element, tags: Set[String]): scala.collection.IndexedSeq[Element] =
+      root.descendantsWhere(e => tags.contains(e.tag))
 
     private def wordCount(s: String): Int = Js.splitWs(s).length
 
@@ -314,17 +412,7 @@ object Readability {
       val textLength = innerTextLength(e)
       if (textLength == 0) return 0.0
       var linkLength = 0.0
-      val it = e.descendants // no mutation here — safe to stream
-      while (it.hasNext) {
-        val a = it.next()
-        if (a.tag == "a") {
-          // hashUrl = /^#.+/ (readability.js): a bare href="#" does NOT
-          // qualify for the 0.3 coefficient — at least one char after '#'
-          val coeff =
-            if (a.attr("href").exists(h => h.length > 1 && h.startsWith("#"))) 0.3 else 1.0
-          linkLength += innerTextLength(a) * coeff
-        }
-      }
+      e.foreachDescendant(a => if (a.tag == "a") linkLength += linkTextLength(a))
       linkLength / textLength
     }
 
@@ -385,9 +473,9 @@ object Readability {
       // CSSOM — a substring check would false-positive on properties that
       // merely END with the name (backface-visibility:hidden), so match the
       // property NAME at a declaration boundary
-      val style = e.attr("style").getOrElse("").replace(" ", "").toLowerCase(java.util.Locale.ROOT)
-      def hasDecl(prop: String, value: String): Boolean = {
-        val needle = prop + ":" + value
+      val style0 = e.attrs.getOrNull("style")
+      val style = if (style0 == null) "" else style0.replace(" ", "").toLowerCase(java.util.Locale.ROOT)
+      def hasDecl(needle: String): Boolean = {
         var from = style.indexOf(needle)
         while (from >= 0) {
           if (from == 0 || style.charAt(from - 1) == ';') return true
@@ -395,9 +483,9 @@ object Readability {
         }
         false
       }
-      val hiddenByStyle = hasDecl("display", "none") || hasDecl("visibility", "hidden")
+      val hiddenByStyle = style.nonEmpty && (hasDecl("display:none") || hasDecl("visibility:hidden"))
       !hiddenByStyle && !e.attrs.contains("hidden") &&
-        !(e.attr("aria-hidden").contains("true") && !e.attr("class").exists(_.contains("fallback-image")))
+        !("true" == e.attrs.getOrNull("aria-hidden") && !e.attr("class").exists(_.contains("fallback-image")))
     }
 
     private def isWhitespaceNode(n: Node): Boolean = n match {
@@ -430,7 +518,7 @@ object Readability {
 
     private def setNodeTag(e: Element, tag: String): Element = {
       val n = new Element(tag)
-      e.attrs.foreach { case (k, v) => n.attrs(k) = v }
+      e.attrs.copyTo(n.attrs)
       while (e.children.nonEmpty) n.appendChild(e.children.head)
       e.replaceWith(n)
       val sc = scores.remove(e)
@@ -530,13 +618,13 @@ object Readability {
         title: Option[String], byline: Option[String], excerpt: Option[String],
         siteName: Option[String], datePublished: Option[String])
 
-    private def getJsonLd(): JsonLdMeta = {
+    /** From the unprepared copy's `<script>` elements, in document order. */
+    private def getJsonLd(scripts: Iterable[Element]): JsonLdMeta = {
       import com.fasterxml.jackson.databind.JsonNode
       val mapper = jsonLdMapper
       val articleTypesRe = jsonLdArticleTypesRe
       val empty = JsonLdMeta(None, None, None, None, None)
-      val scripts = Selector("""script[type="application/ld+json"]""").findIn(doc.html)
-      scripts.foreach { s =>
+      scripts.iterator.filter(s => s.tag == "script" && s.attr("type").contains("application/ld+json")).foreach { s =>
         try {
           val content = cdataWrapRe.matcher(s.text()).replaceAll("")
           var parsed: JsonNode = mapper.readTree(content)
@@ -597,14 +685,10 @@ object Readability {
         title: String, byline: Option[String], excerpt: Option[String],
         siteName: Option[String], publishedTime: Option[String])
 
-    private val metaPropertyRe = Pattern.compile(
-      "\\s*(article|dc|dcterm|og|twitter)\\s*:\\s*(author|creator|pub_date|description|title|site_name)\\s*", Pattern.CASE_INSENSITIVE)
-    private val metaNameRe = Pattern.compile(
-      "^\\s*(?:(dc|dcterm|og|twitter|parsely|weibo:(article|webpage))\\s*[-\\.:]\\s*)?(author|creator|pub-date|description|title|site_name)\\s*$", Pattern.CASE_INSENSITIVE)
-
-    private def getArticleMetadata(jsonld: JsonLdMeta): Metadata = {
+    /** From the prepared copy's `<meta>` elements, in document order. */
+    private def getArticleMetadata(jsonld: JsonLdMeta, metas: Iterable[Element]): Metadata = {
       val values = mutable.LinkedHashMap.empty[String, String]
-      allTags(doc.html, Set("meta")).foreach { meta =>
+      metas.foreach { meta =>
         val elementName = meta.attr("name").getOrElse("")
         val elementProperty = meta.attr("property").getOrElse("")
         val content = meta.attr("content").getOrElse("")
@@ -665,9 +749,6 @@ object Readability {
 
     // ---- document prep ----
 
-    private def removeScripts(d: DomDoc): Unit =
-      allTags(d.html, Set("script", "noscript")).foreach(_.remove())
-
     /** `_isSingleImage` (readability.js): the node is an <img>, or a chain
       * of single-element-child wrappers with whitespace-only text ending in
       * an <img>. */
@@ -690,8 +771,8 @@ object Readability {
       * builds noscript children as regular DOM (scripting-disabled
       * semantics, same as the reference's jsdom), so the reference's
       * innerHTML re-parse into a temp <div> is the identity here. */
-    private def unwrapNoscriptImages(d: DomDoc): Unit = {
-      allTags(d.html, Set("img")).foreach { img =>
+    private def unwrapNoscriptImages(l: PrepSource): Unit = {
+      l.imgs.foreach { img =>
         var keep = false
         img.attrs.foreach { case (k, v) =>
           if (k == "src" || k == "srcset" || k == "data-src" || k == "data-srcset") keep = true
@@ -699,7 +780,7 @@ object Readability {
         }
         if (!keep) img.remove()
       }
-      allTags(d.html, Set("noscript")).foreach { noscript =>
+      l.noscripts.foreach { noscript =>
         val inner = noscript.children.iterator.collect { case e: Element => e }.take(2).toList
         if (inner.length == 1 && textIsAllWs(noscript) && isSingleImage(inner.head)) {
           val prevElement = {
@@ -805,8 +886,9 @@ object Readability {
       if (idx >= 0 && idx + 1 < p.children.length) p.children(idx + 1) else null
     }
 
-    private def replaceBrs(elem: Element): Unit = {
-      allTags(elem, Set("br")).foreach { br =>
+    /** `_replaceBrs` over the body's `<br>`s, in document order. */
+    private def replaceBrs(brs: Iterable[Element]): Unit = {
+      brs.foreach { br =>
         if (br.parent != null) {
           var next: Node = nodeNextSibling(br)
           var replaced = false
@@ -846,19 +928,18 @@ object Readability {
       }
     }
 
-    private def prepDocument(d: DomDoc): Unit = {
-      allTags(d.html, Set("style")).foreach(_.remove())
-      replaceBrs(d.body)
-      allTags(d.html, Set("font")).foreach(setNodeTag(_, "span"))
-    }
-
     /** The document changes made before the first grab — and replayed on a
-      * fresh copy of the input for every retry. `unwrapNoscriptImages` goes
-      * before `removeScripts`, which deletes every <noscript>. */
-    private def prepare(d: DomDoc): Unit = {
-      unwrapNoscriptImages(d)
-      removeScripts(d)
-      prepDocument(d)
+      * fresh copy of the input for every retry — over the elements of a copy
+      * that `l` lists ([[PrepLists]]: one walk of it). `unwrapNoscriptImages`
+      * goes before the script removal, which deletes every <noscript>; then
+      * styles go, `<br>` runs in the body become paragraphs and fonts become
+      * spans. */
+    private[Readability] def prepare(l: PrepSource): Unit = {
+      unwrapNoscriptImages(l)
+      l.scripts.foreach(_.remove())
+      l.styles.foreach(_.remove())
+      replaceBrs(l.bodyBrs)
+      l.fonts.foreach(setNodeTag(_, "span"))
     }
 
     // ---- grab article ----
@@ -879,10 +960,10 @@ object Readability {
           var advanced = false
 
           if (!isProbablyVisible(node)) { node = removeAndGetNext(node); advanced = true }
-          else if (node.attr("aria-modal").contains("true") && node.attr("role").contains("dialog")) {
+          else if ("true" == node.attrs.getOrNull("aria-modal") && "dialog" == node.attrs.getOrNull("role")) {
             node = removeAndGetNext(node); advanced = true
           }
-          else if (checkByline(node, matchString)) { node = removeAndGetNext(node); advanced = true }
+          else if (checkByline(node, matchLower)) { node = removeAndGetNext(node); advanced = true }
           else if (shouldRemoveTitleHeader && headerDuplicatesTitle(node)) {
             shouldRemoveTitleHeader = false
             node = removeAndGetNext(node); advanced = true
@@ -1097,7 +1178,7 @@ object Readability {
           // restore the body for the next attempt: the input's body after
           // the same pre-grab steps; head and body attributes stay as they are
           val fresh = input.deepClone()
-          prepare(fresh)
+          prepare(new PrepLists(fresh))
           doc.body.children.clear()
           while (fresh.body.children.nonEmpty) doc.body.appendChild(fresh.body.children.head)
           scores.clear()
@@ -1117,11 +1198,12 @@ object Readability {
       None
     }
 
-    private def checkByline(node: Element, matchString: String): Boolean = {
+    /** `matchLower`: the node's ascii-lowered "class id" match string. */
+    private def checkByline(node: Element, matchLower: String): Boolean = {
       if (articleByline.isDefined) return false
       val rel = node.attr("rel").getOrElse("")
       val itemprop = node.attr("itemprop").getOrElse("")
-      if (rel == "author" || itemprop.contains("author") || bylineAlt.findIn(asciiLower(matchString))) {
+      if (rel == "author" || itemprop.contains("author") || bylineAlt.findIn(matchLower)) {
         val text = Js.trim(node.text())
         if (text.nonEmpty && text.length < 100) {
           articleByline = Some(text)
@@ -1209,29 +1291,11 @@ object Readability {
       e.childElements.toVector.foreach(cleanStyles)
     }
 
-    private def getTextDensity(e: Element, tags: Set[String]): Double = {
-      val textLength = innerTextLength(e)
-      if (textLength == 0) return 0.0
-      var childrenLength = 0
-      allTags(e, tags).foreach(c => childrenLength += innerTextLength(c))
-      childrenLength.toDouble / textLength
-    }
-
     private def cleanConditionally(root: Element, tag: String): Unit = {
       if (!flagActive(FlagCleanConditionally)) return
       val isList0 = tag == "ul" || tag == "ol"
       allTags(root, Set(tag)).foreach { node =>
         if (node.parent != null) {
-          var isList = isList0
-          if (!isList0) {
-            // readability.js: EVERY non-ul/ol tag (div, table, form,
-            // fieldset) is treated as a list when >90% of its text lives
-            // inside lists — not just div
-            var listLength = 0.0
-            allTags(node, Set("ul", "ol")).foreach(l => listLength += innerTextLength(l))
-            val total = innerTextLength(node)
-            isList = total > 0 && listLength / total > 0.9
-          }
           val skip =
             (tag == "table" && isDataTable(node)) ||
             hasAncestorTag(node, "table", -1, isDataTable) ||
@@ -1240,22 +1304,20 @@ object Readability {
             val weight = getClassWeight(node)
             if (weight < 0) node.remove()
             else if (charCount(node) - 1 < 10) {
-              val embedTags = Set("object", "embed", "iframe")
-              var embedCount = 0
-              var videoEmbed = false
-              allTags(node, embedTags).foreach { embed =>
-                val attrValues = embed.attrs.values.mkString("|")
-                if (videosRe.matcher(attrValues).find()) videoEmbed = true
-                else embedCount += 1
-              }
-              if (!videoEmbed) {
-                val p = allTags(node, Set("p")).length
-                val img = allTags(node, Set("img")).length
-                val li = allTags(node, Set("li")).length - 100
-                val input = allTags(node, Set("input")).length
-                val headingDensity = getTextDensity(node, Set("h1", "h2", "h3", "h4", "h5", "h6"))
-                val linkDensity = getLinkDensity(node)
+              val c = new SubtreeCounts(node)
+              if (!c.videoEmbed) {
                 val contentLength = innerTextLength(node)
+                // readability.js: EVERY non-ul/ol tag (div, table, form,
+                // fieldset) is treated as a list when >90% of its text lives
+                // inside lists — not just div
+                val isList = isList0 || (contentLength > 0 && c.listLength / contentLength > 0.9)
+                val p = c.p
+                val img = c.img
+                val li = c.li - 100
+                val input = c.input
+                val headingDensity = if (contentLength == 0) 0.0 else c.headingLength.toDouble / contentLength
+                val linkDensity = if (contentLength == 0) 0.0 else c.linkLength / contentLength
+                val embedCount = c.embeds
                 var haveToRemove =
                   (img > 1 && p.toDouble / img < 0.5 && !hasAncestorTag(node, "figure")) ||
                   (!isList && li > p) ||
@@ -1269,7 +1331,7 @@ object Readability {
                 // count equals its li count is an image gallery — keep it
                 if (isList && haveToRemove) {
                   val simple = node.childElements.forall(_.childElements.size <= 1)
-                  if (simple && img == allTags(node, Set("li")).length)
+                  if (simple && img == c.li)
                     haveToRemove = false
                 }
                 if (haveToRemove) node.remove()
@@ -1311,12 +1373,9 @@ object Readability {
 
       allTags(articleContent, Set("h1")).foreach(setNodeTag(_, "h2"))
 
+      // a paragraph with no img/embed/object/iframe and no text goes
       allTags(articleContent, Set("p")).foreach { para =>
-        val imgCount = allTags(para, Set("img")).length
-        val embedCount = allTags(para, Set("embed")).length
-        val objectCount = allTags(para, Set("object")).length
-        val iframeCount = allTags(para, Set("iframe")).length
-        if (imgCount + embedCount + objectCount + iframeCount == 0 && textIsAllWs(para))
+        if (para.firstDescendant(e => mediaInParaTags.contains(e.tag)) == null && textIsAllWs(para))
           para.remove()
       }
 
@@ -1419,9 +1478,10 @@ object Readability {
       // getJsonLd reads only ld+json <script>s, which prepare removes and
       // unwrapNoscriptImages never touches (a script is never part of a
       // single-image chain), so reading them first sees the same text
-      val jsonLd = getJsonLd()
-      prepare(doc)
-      val metadata = getArticleMetadata(jsonLd)
+      val lists = new PrepLists(doc)
+      val jsonLd = getJsonLd(lists.scripts)
+      prepare(lists)
+      val metadata = getArticleMetadata(jsonLd, lists.metas)
       articleTitle = metadata.title
 
       val articleContentOpt = grabArticle()

@@ -148,16 +148,10 @@ object XmlParser {
 
   /** All descendants with exact (case-sensitive) tag. */
   def find(root: Element, tag: String): Vector[Element] =
-    root.descendants.filter(_.tag == tag).toVector
+    root.descendantsWhere(_.tag == tag).toVector
 
-  def findFirst(root: Element, tag: String): Option[Element] = {
-    val it = root.descendants
-    while (it.hasNext) {
-      val e = it.next()
-      if (e.tag == tag) return Some(e)
-    }
-    None
-  }
+  def findFirst(root: Element, tag: String): Option[Element] =
+    Option(root.firstDescendant(_.tag == tag))
 
   /** Direct children with exact tag — cheerio `find('> tag')`. */
   def children(root: Element, tag: String): Vector[Element] =

@@ -176,8 +176,13 @@ object ExtractJob {
     var i = 0
     while (i + charsetLit.length <= n) {
       var j = 0
-      while (j < charsetLit.length &&
-        (bytes(i + j) | 0x20) == charsetLit(j)) j += 1 // ASCII case-fold
+      while (j < charsetLit.length && {
+        // ASCII case-fold of the letters only: `b | 0x20` would also read
+        // the control byte 0x1D as '='
+        val b = bytes(i + j)
+        val lit = charsetLit(j)
+        b == lit || (lit >= 'a' && lit <= 'z' && (b | 0x20) == lit)
+      }) j += 1
       if (j == charsetLit.length) {
         var k = i + j
         if (k < n && (bytes(k) == '"' || bytes(k) == '\'')) k += 1
@@ -266,8 +271,10 @@ object ExtractJob {
    * bytes than shuffle-first; on the synthetic bench corpus the inequality
    * is reversed (extracted ≈ 2× html) — `Bench` measures both.
    *
-   * The mega-host salt map is computed from the cheap url-only input scan,
-   * NOT from the extracted relation (which would re-run extraction).
+   * The mega-host salt map is computed eagerly, here, from the cheap url-only
+   * input scan ([[extractFirstMegaMap]]), NOT from the extracted relation
+   * (which would re-run extraction). [[extractAuto]] runs the same two steps
+   * on a second driver thread while it samples.
    */
   def extractFirst(
       pages: Dataset[PageRow],
@@ -275,21 +282,36 @@ object ExtractJob {
       counters: Option[Counters] = None,
       manifest: Option[org.apache.spark.util.CollectionAccumulator[ManifestRow]] = None,
       runId: String = "run"
+  ): Dataset[ScrapedRow] =
+    extractFirstWith(pages, extractFirstMegaMap(pages, numPartitions), numPartitions,
+      counters, manifest, runId)
+
+  /** The extract_first mega-host pre-pass. The map must be keyed on the SAME
+    * host strings the salted exchange reads — the EXTRACTED rows' urls,
+    * which extraction has passed through UrlOps.normalizeUrl (case, www,
+    * tracking params). A raw-keyed map looks equivalent but misses at apply
+    * time whenever normalization changes the host (e.g. WWW.MegaHost.com),
+    * silently no-opping the skew split for exactly the hosts it exists to
+    * split. Applying the same pure normalization in the pre-pass keeps it a
+    * column-pruned scan — extraction still runs exactly once. */
+  private def extractFirstMegaMap(pages: Dataset[PageRow], numPartitions: Int)
+      : org.apache.spark.broadcast.Broadcast[Map[String, Int]] = {
+    val normUrl = udf((u: String) =>
+      graft.urlx.UrlOps.normalizeUrl(if (u == null) "" else u))
+    megaHostMap(pages.toDF().select(normUrl(col("url")).as("url")), numPartitions)
+  }
+
+  /** The extract_first Dataset over an already computed mega-host map. */
+  private def extractFirstWith(
+      pages: Dataset[PageRow],
+      mega: org.apache.spark.broadcast.Broadcast[Map[String, Int]],
+      numPartitions: Int,
+      counters: Option[Counters],
+      manifest: Option[org.apache.spark.util.CollectionAccumulator[ManifestRow]],
+      runId: String
   ): Dataset[ScrapedRow] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    // the mega-host map must be keyed on the SAME host strings the salted
-    // exchange reads — the EXTRACTED rows' urls, which extraction has
-    // passed through UrlOps.normalizeUrl (case, www, tracking params). A
-    // raw-keyed map looks equivalent but misses at apply time whenever
-    // normalization changes the host (e.g. WWW.MegaHost.com), silently
-    // no-opping the skew split for exactly the hosts it exists to split.
-    // Applying the same pure normalization in the pre-pass keeps it a
-    // column-pruned scan — extraction still runs exactly once.
-    val normUrl = udf((u: String) =>
-      graft.urlx.UrlOps.normalizeUrl(if (u == null) "" else u))
-    val mega = megaHostMap(
-      pages.toDF().select(normUrl(col("url")).as("url")), numPartitions)
     val extracted = extractOnSplits(pages, counters, manifest, runId)
     applySaltedRepartition(extracted.toDF(), mega, numPartitions)
       .drop("__host").as[ScrapedRow]
@@ -364,16 +386,74 @@ object ExtractJob {
 
   /** Auto-planned extraction for unbucketed input: [[chooseVariant]] on a
     * sample, then the chosen plan. (Bucketed-at-ingest input should call
-    * [[extractOnSplits]] directly — no exchange beats either choice.) */
+    * [[extractOnSplits]] directly — no exchange beats either choice.)
+    *
+    * The extract_first planning does not need the sample's verdict, so it
+    * runs beside it: while [[chooseVariant]] samples on the caller's thread,
+    * a second driver thread runs the extract_first mega-host pre-pass and
+    * builds that plan's Dataset. The thread carries the caller's job group,
+    * description, job tags, scheduler pool and active session
+    * (`SQLExecution.withThreadLocalCaptured`), so cancelling the caller's
+    * group or tags cancels the pre-pass too. On extract_first the result is
+    * used as is (a pre-pass failure is rethrown here); on shuffle_first the
+    * pre-pass jobs are cancelled, its broadcast is destroyed, and [[extract]]
+    * runs as before. Either way no pre-pass job is running when this
+    * returns. Rows equal the explicit plan's. */
   def extractAuto(
       pages: Dataset[PageRow],
       numPartitions: Int,
       counters: Option[Counters] = None,
       manifest: Option[org.apache.spark.util.CollectionAccumulator[ManifestRow]] = None,
       runId: String = "run"
-  ): (String, Dataset[ScrapedRow]) = chooseVariant(pages) match {
-    case v @ "extract_first" => (v, extractFirst(pages, numPartitions, counters, manifest, runId))
-    case v => (v, extract(pages, numPartitions, counters, manifest, runId))
+  ): (String, Dataset[ScrapedRow]) = {
+    val spark = pages.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val sc = spark.sparkContext
+    val tag = s"$PrePassTagPrefix${java.util.UUID.randomUUID()}"
+    val prePass = org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(spark, planThreads) {
+      sc.addJobTag(tag)
+      val mega = extractFirstMegaMap(pages, numPartitions)
+      (mega, extractFirstWith(pages, mega, numPartitions, counters, manifest, runId))
+    }
+    val variant =
+      try chooseVariant(pages)
+      catch { case e: Throwable => abandon(prePass, sc, tag); throw e }
+    if (variant != "extract_first") {
+      abandon(prePass, sc, tag)
+      (variant, extract(pages, numPartitions, counters, manifest, runId))
+    } else
+      try (variant, prePass.get()._2)
+      catch {
+        case e: java.util.concurrent.ExecutionException if e.getCause != null => throw e.getCause
+        case e: InterruptedException => sc.cancelJobsWithTag(tag); throw e
+      }
+  }
+
+  /** Job-tag prefix of [[extractAuto]]'s concurrent pre-pass jobs. */
+  private[pipeline] val PrePassTagPrefix = "graft-extract-first-prepass-"
+
+  /** Daemon threads for [[extractAuto]]'s concurrent planning, one per
+    * call in flight; idle threads exit after a minute. */
+  private lazy val planThreads: java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newCachedThreadPool { (r: Runnable) =>
+      val t = new Thread(r, "graft-extract-auto-plan")
+      t.setDaemon(true)
+      t
+    }
+
+  /** Cancels an unneeded pre-pass and waits for its thread to finish, then
+    * destroys the broadcast it made. Cancelling by tag reaches only running
+    * jobs, so it repeats until the thread is done: a job started between two
+    * cancels is cancelled by the next. */
+  private def abandon(
+      prePass: java.util.concurrent.CompletableFuture[_ <: (org.apache.spark.broadcast.Broadcast[_], _)],
+      sc: org.apache.spark.SparkContext,
+      tag: String): Unit = {
+    while (!prePass.isDone) {
+      sc.cancelJobsWithTag(tag)
+      try prePass.get(20, java.util.concurrent.TimeUnit.MILLISECONDS)
+      catch { case _: java.util.concurrent.TimeoutException | _: java.util.concurrent.ExecutionException => }
+    }
+    if (!prePass.isCompletedExceptionally) prePass.get()._1.destroy()
   }
 
   private def fusedExtract(

@@ -173,14 +173,8 @@ object Sitemap {
     if (i < 0) tag else tag.substring(i + 1)
   }
 
-  private def firstElementByLocal(root: Element, names: Set[String]): Option[Element] = {
-    val it = root.descendants
-    while (it.hasNext) {
-      val e = it.next()
-      if (names.contains(localName(e.tag))) return Some(e)
-    }
-    None
-  }
+  private def firstElementByLocal(root: Element, names: Set[String]): Option[Element] =
+    Option(root.firstDescendant(e => names.contains(localName(e.tag))))
 
   private def childTextLocal(el: Element, name: String): String =
     el.childElements.filter(c => localName(c.tag) == name).map(_.text()).mkString

@@ -170,4 +170,26 @@ class HtmlParserSpec extends AnyFunSuite {
     val doc = HtmlParser.parse("a < b &amp; c <3 </ x<!--c-->d<?pi?>e<")
     assert(doc.body.text() == "a < b & c <3 </ xde<")
   }
+
+  test("a non-ASCII name that lowercases to a void or raw-text tag keeps that tag's rules") {
+    // the Kelvin sign lowercases to 'k': these names miss the name table
+    val doc = HtmlParser.parse("<div><lin\u212A href=\"/a\"><span>s</span><s\u212Aip>x</s\u212Aip></div>" +
+      "<\u212Ascript><b>raw</b></\u212Ascript>")
+    val div = doc.body.childElements.next()
+    assert(div.childElements.map(_.tag).toVector == Vector("link", "span", "s\u212Aip".toLowerCase))
+    assert(div.children.head.asInstanceOf[Element].children.isEmpty)
+  }
+
+  test("start tags read their void, raw-text, RCDATA, p-closing and head flags") {
+    // basefont and bgsound are head-allowed, so they do not open the body
+    val doc = HtmlParser.parse("<html><head><basefont></basefont><bgsound></bgsound><title>a &amp; b</title></head>" +
+      "<body><p>one<div>two</div><textarea><i>t</i> &lt;</textarea><xmp><i>x</i></xmp><hr><wbr>end</body></html>")
+    assert(doc.head.childElements.map(_.tag).toVector == Vector("basefont", "bgsound", "title"))
+    assert(doc.head.childElements.toVector.last.text() == "a & b")
+    assert(doc.body.childElements.map(_.tag).toVector == Vector("p", "div", "textarea", "xmp", "hr", "wbr"))
+    val ta = doc.body.childElements.toVector(2)
+    assert(ta.text() == "<i>t</i> <" && ta.childElements.isEmpty)
+    assert(doc.body.childElements.toVector(3).text() == "<i>x</i>")
+    assert(doc.body.childElements.toVector(4).children.isEmpty)
+  }
 }

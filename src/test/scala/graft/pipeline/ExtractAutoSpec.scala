@@ -1,14 +1,24 @@
 package graft.pipeline
 
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.spark.{TestBroadcasts, TestListenerBus}
+import org.apache.spark.scheduler.{JobResult, JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, udf}
+import org.scalatest.concurrent.Eventually
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 import org.scalatest.BeforeAndAfterAll
 
 /** Byte-ratio auto plan selection (BASELINE.md plan-order note, VERDICT r3
   * #6): markup-heavy corpora must pick extract_first (the extracted side
   * shuffles fewer bytes), dense-text corpora shuffle_first — and the chosen
-  * plan must produce the same rows as the explicit plans. */
-class ExtractAutoSpec extends AnyFunSuite with BeforeAndAfterAll {
+  * plan must produce the same rows as the explicit plans. The extract_first
+  * pre-pass runs on a second driver thread while the sample is taken: its
+  * jobs carry the caller's properties, it is cancelled and cleaned up on
+  * shuffle_first, and its failure surfaces. */
+class ExtractAutoSpec extends AnyFunSuite with BeforeAndAfterAll with Eventually {
 
   private var spark: SparkSession = _
 
@@ -45,5 +55,114 @@ class ExtractAutoSpec extends AnyFunSuite with BeforeAndAfterAll {
     val explicitRows = ExtractJob.extract(pages, 4).collect().map(r => (r.url, r.norm_hash)).toSet
     assert(autoRows == explicitRows)
     assert(autoRows.size == 120)
+  }
+
+  /** Runs `body` with a listener that records every job start and end. */
+  private def withJobs[T](body: (ConcurrentLinkedQueue[SparkListenerJobStart],
+      ConcurrentLinkedQueue[SparkListenerJobEnd]) => T): T = {
+    val sc = spark.sparkContext
+    val starts = new ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val ends = new ConcurrentLinkedQueue[SparkListenerJobEnd]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = starts.add(e)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ends.add(e)
+    }
+    sc.addSparkListener(listener)
+    try body(starts, ends) finally sc.removeSparkListener(listener)
+  }
+
+  private def isPrePass(e: SparkListenerJobStart): Boolean =
+    Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+      .exists(_.split(",").exists(_.startsWith(ExtractJob.PrePassTagPrefix)))
+
+  test("the concurrent pre-pass jobs carry the caller's job group, description, tags and pool") {
+    val sc = spark.sparkContext
+    withJobs { (starts, _) =>
+      sc.setJobGroup("auto-group", "auto description")
+      sc.addJobTag("auto-caller")
+      sc.setLocalProperty("spark.scheduler.pool", "auto-pool")
+      try {
+        val (variant, rows) = ExtractJob.extractAuto(PagesGen.generateHeavy(spark, 160), numPartitions = 4)
+        assert(variant == "extract_first")
+        assert(rows.count() == 160)
+      } finally {
+        sc.clearJobGroup()
+        sc.removeJobTag("auto-caller")
+        sc.setLocalProperty("spark.scheduler.pool", null)
+      }
+      TestListenerBus.drain(sc)
+      val prePass = starts.asScala.filter(isPrePass).toSeq
+      assert(prePass.nonEmpty)
+      prePass.foreach { e =>
+        val p = e.properties
+        assert(p.getProperty("spark.jobGroup.id") == "auto-group")
+        assert(p.getProperty("spark.job.description") == "auto description")
+        assert(p.getProperty("spark.job.tags").split(",").contains("auto-caller"))
+        assert(p.getProperty("spark.scheduler.pool") == "auto-pool")
+      }
+    }
+    // the caller's own thread does not keep the pre-pass tag
+    assert(!sc.getJobTags().exists(_.startsWith(ExtractJob.PrePassTagPrefix)))
+  }
+
+  /** Runs `extractAuto` on a shuffle_first corpus and checks what is left of
+    * the pre-pass when it returns: no pre-pass job started or still running,
+    * and no pre-pass broadcast alive — only `extract`'s own mega-host map is
+    * new. Returns the pre-pass jobs' results. */
+  private def shuffleFirstLeavesNoPrePass(pages: org.apache.spark.sql.Dataset[PageRow]): Seq[JobResult] = {
+    val sc = spark.sparkContext
+    withJobs { (starts, ends) =>
+      val before = TestBroadcasts.liveMaps(sc)
+      val (variant, _) = ExtractJob.extractAuto(pages, numPartitions = 4)
+      val returned = System.currentTimeMillis()
+      assert(variant == "shuffle_first")
+      TestListenerBus.drain(sc)
+      val prePass = starts.asScala.filter(isPrePass).toSeq
+      val ended = ends.asScala.map(e => e.jobId -> e).toMap
+      prePass.foreach { e =>
+        assert(e.time <= returned)
+        assert(ended.get(e.jobId).exists(_.time <= returned), s"pre-pass job ${e.jobId} still running")
+      }
+      eventually(timeout(Span(20, Seconds))) {
+        assert((TestBroadcasts.liveMaps(sc) -- before).size == 1)
+      }
+      prePass.map(e => ended(e.jobId).jobResult)
+    }
+  }
+
+  test("shuffle_first: a pre-pass that finished first has its broadcast destroyed") {
+    val session = spark
+    import session.implicits._
+    // the sample reads html, slowed per row; the pre-pass reads only urls
+    val slowHtml = udf { (h: Array[Byte]) => Thread.sleep(5); h }
+    val pages = PagesGen.generate(spark, 400).withColumn("html", slowHtml(col("html"))).as[PageRow]
+    val results = shuffleFirstLeavesNoPrePass(pages)
+    assert(results.nonEmpty && results.forall(_ == JobSucceeded))
+  }
+
+  test("shuffle_first: a running pre-pass is cancelled before extractAuto returns") {
+    val session = spark
+    import session.implicits._
+    // the sample reads the first 256 rows, all in the first partition; the
+    // pre-pass also reads the slowed urls after them
+    val slowUrl = udf { (u: String) => Thread.sleep(50); u }
+    val ok = PagesGen.generate(spark, 300).coalesce(1)
+    val slow = PagesGen.generate(spark, 100).withColumn("url", slowUrl(col("url"))).as[PageRow]
+    val results = shuffleFirstLeavesNoPrePass(ok.union(slow))
+    assert(results.exists(_ != JobSucceeded))
+  }
+
+  test("a failure in the concurrent pre-pass surfaces from extractAuto") {
+    val session = spark
+    import session.implicits._
+    // the sample reads only the first 256 rows, all in the first partition;
+    // the pre-pass reads every url and meets the failing ones
+    val boom = udf { (u: String) => if (u != null) throw new IllegalStateException("pre-pass boom"); u }
+    val ok = PagesGen.generateHeavy(spark, 300).coalesce(1)
+    val failing = PagesGen.generateHeavy(spark, 40).withColumn("url", boom(col("url"))).as[PageRow]
+    val e = intercept[Throwable](ExtractJob.extractAuto(ok.union(failing), numPartitions = 4))
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException])
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(t =>
+      String.valueOf(t.getMessage).contains("pre-pass boom")))
   }
 }

@@ -102,6 +102,20 @@ object FoldCorpus {
       s"""<html><head><title>Retry noscript</title></head><body><div class="comment"><p>${long(3)}</p><img src="ph.gif"><script>x()</script><noscript><img src="real-retry.jpg"></noscript><img alt="no source"><font>f</font><p>a<br><br>b</p></div></body></html>"""),
     Doc("readability-retry-head-mutation", "https://adv.example.com/a/retry-head",
       s"""<html><head><title>Retry head</title><meta name="x" hidden></head><body><div class="sidebar"><p>${long(1)}</p><font>font text</font><br><br>after brs<style>p{}</style></div></body></html>"""),
+    Doc("prep-noscript-holds-style-font-br", "https://adv.example.com/a/prep-noscript",
+      s"""<html><head><title>Noscript holds</title></head><body><article><p>${long(3)}</p><noscript><style>p{color:red}</style><font>f</font><br><br>after<meta name="description" content="hidden meta"></noscript><p>${long(2)}</p></article></body></html>"""),
+    Doc("prep-nested-fonts", "https://adv.example.com/a/prep-fonts",
+      s"""<html><head><title>Nested fonts</title></head><body><div><p><font color="red">outer <font size="2">inner <font>innermost</font></font> tail</font> ${long(3)}</p></div></body></html>"""),
+    Doc("prep-br-runs-in-p", "https://adv.example.com/a/prep-brs",
+      s"""<html><head><title>Br runs</title></head><body><div><p>first<br><br>second<br><br><br>third<br>fourth ${long(3)}</p><p>a<br> <br>b</p></div></body></html>"""),
+    Doc("prep-script-in-noscript", "https://adv.example.com/a/prep-script",
+      s"""<html><head><title>Script in noscript</title><noscript><script type="application/ld+json">{"@context":"https://schema.org","@type":"Article","headline":"Inside noscript"}</script></noscript></head><body><article><p>${long(3)}</p><noscript><script>track()</script><img src="n.jpg"></noscript></article></body></html>"""),
+    Doc("prep-placeholder-then-noscript-image", "https://adv.example.com/a/prep-placeholder",
+      s"""<html><head><title>Placeholder</title></head><body><article><p>${long(3)}</p><font><img src="ph.gif" data-src="lazy.png"></font> <noscript> <font><img src="real.jpg" alt="r"></font> </noscript><p>${long(2)}</p></article></body></html>"""),
+    Doc("blocks-content-before-main", "https://adv.example.com/a/content-main",
+      s"""<html><head><title>Content first</title></head><body><div class="nav content"><p>${long(2)}</p></div><main><p>${long(2)}</p></main></body></html>"""),
+    Doc("blocks-container-in-dropped-subtree", "https://adv.example.com/a/dropped-container",
+      s"""<html><head><title>Dropped container</title></head><body><div hidden><article><p>hidden article</p></article></div><section><p>${long(2)}</p><main><p>${long(2)}</p></main></section></body></html>"""),
     Doc("empty-body", "https://adv.example.com/a/empty", "<html><head><title>Only title</title></head><body></body></html>"),
     Doc("blocks-drop-and-container", "https://adv.example.com/a/blocks",
       s"""<html><head><title>Blocks</title></head><body><div id="content"><h2>Sub</h2><p>${long(2)}</p><div class="ad"><p>ad text</p></div><iframe>frame</iframe><svg><text>svg</text></svg><canvas>c</canvas><figure><img src="f.png" alt="fig"></figure><video poster="v.png"><source src="v.mp4">video</video><p aria-hidden="false">visible</p><p aria-hidden="true">invisible</p></div></body></html>""")
