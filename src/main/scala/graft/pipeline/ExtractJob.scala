@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
@@ -33,7 +33,10 @@ object ExtractJob {
   /** Extract the URL host in pure built-ins (stays inside codegen). A
     * malformed url gets a null host, like a null url, instead of failing
     * the job under ANSI mode. */
-  def hostCol = regexp_replace(try_parse_url(col("url"), lit("HOST")), "^www\\.", "")
+  def hostCol = hostOf(col("url"))
+
+  /** [[hostCol]] of any url column. */
+  private def hostOf(url: Column) = regexp_replace(try_parse_url(url, lit("HOST")), "^www\\.", "")
 
   /**
    * Hash-by-host partitioning with salt-based skew splitting. Hosts whose
@@ -57,16 +60,23 @@ object ExtractJob {
     * column-pruned aggregate over `url` ONLY — callers hand it the cheap
     * input relation even when the relation being repartitioned is the
     * (expensive to recompute) extracted side. */
-  def megaHostMap(pages: DataFrame, numPartitions: Int): org.apache.spark.broadcast.Broadcast[Map[String, Int]] = {
-    val top = megaHostCounts(pages, numPartitions).collect()
-    val totalRows = math.max(1L,
-      top.collectFirst { case r if r.getLong(2) == 1L => r.getLong(1) }.getOrElse(0L))
-    val rowsPerBucket = math.max(1L, totalRows / numPartitions)
+  def megaHostMap(pages: DataFrame, numPartitions: Int): org.apache.spark.broadcast.Broadcast[Map[String, Int]] =
     pages.sparkSession.sparkContext.broadcast(
-      top.iterator
-        .filter(r => r.getLong(2) == 0L && r.getLong(1) > rowsPerBucket)
-        .map(r => r.getString(0) -> math.ceil(r.getLong(1).toDouble / rowsPerBucket).toInt)
-        .toMap)
+      megaHosts(megaHostCounts(pages, numPartitions).collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))),
+        numPartitions, hostGid = 0L, totalGid = 1L))
+
+  /** Mega-host map from the largest `(host, count, grouping id)` rows of a
+    * host aggregate: the hosts of grouping set `hostGid` whose count
+    * exceeds `total / numPartitions` → their salt-bucket count, where the
+    * total is the count of grouping set `totalGid`. */
+  private def megaHosts(top: Array[(String, Long, Long)], numPartitions: Int,
+                        hostGid: Long, totalGid: Long): Map[String, Int] = {
+    val totalRows = math.max(1L, top.collectFirst { case (_, n, `totalGid`) => n }.getOrElse(0L))
+    val rowsPerBucket = math.max(1L, totalRows / numPartitions)
+    top.iterator
+      .collect { case (host, n, `hostGid`) if n > rowsPerBucket =>
+        host -> math.ceil(n.toDouble / rowsPerBucket).toInt }
+      .toMap
   }
 
   /** `(__host, count, grouping_id)` for the `numPartitions + 1` largest
@@ -229,13 +239,25 @@ object ExtractJob {
       counters: Option[Counters] = None,
       manifest: Option[org.apache.spark.util.CollectionAccumulator[ManifestRow]] = None,
       runId: String = "run"
+  ): Dataset[ScrapedRow] =
+    extractWith(pages, megaHostMap(pages.toDF().select("url"), numPartitions), numPartitions,
+      counters, manifest, runId)
+
+  /** The shuffle_first Dataset over an already computed mega-host map. */
+  private def extractWith(
+      pages: Dataset[PageRow],
+      mega: org.apache.spark.broadcast.Broadcast[Map[String, Int]],
+      numPartitions: Int,
+      counters: Option[Counters],
+      manifest: Option[org.apache.spark.util.CollectionAccumulator[ManifestRow]],
+      runId: String
   ): Dataset[ScrapedRow] = {
     val spark = pages.sparkSession
     import spark.implicits._
     // prune to the two columns extraction reads BEFORE the exchange: the
     // crawl-provided text/lang/warc_ts columns never ride the shuffle
     // (at 100 TB that is a double-digit percentage of shuffle bytes)
-    val repartitioned = saltedRepartitionByHost(pages.toDF().select("url", "html"), numPartitions)
+    val repartitioned = applySaltedRepartition(pages.toDF().select("url", "html"), mega, numPartitions)
       .select("url", "html").as[(String, Array[Byte])]
     fusedExtract(repartitioned, counters, manifest, runId)
   }
@@ -273,8 +295,8 @@ object ExtractJob {
    *
    * The mega-host salt map is computed eagerly, here, from the cheap url-only
    * input scan ([[extractFirstMegaMap]]), NOT from the extracted relation
-   * (which would re-run extraction). [[extractAuto]] runs the same two steps
-   * on a second driver thread while it samples.
+   * (which would re-run extraction). [[extractAuto]] computes the same map
+   * on a second driver thread while it samples ([[planMegaHostMaps]]).
    */
   def extractFirst(
       pages: Dataset[PageRow],
@@ -295,11 +317,39 @@ object ExtractJob {
     * split. Applying the same pure normalization in the pre-pass keeps it a
     * column-pruned scan — extraction still runs exactly once. */
   private def extractFirstMegaMap(pages: Dataset[PageRow], numPartitions: Int)
-      : org.apache.spark.broadcast.Broadcast[Map[String, Int]] = {
-    val normUrl = udf((u: String) =>
-      graft.urlx.UrlOps.normalizeUrl(if (u == null) "" else u))
-    megaHostMap(pages.toDF().select(normUrl(col("url")).as("url")), numPartitions)
+      : org.apache.spark.broadcast.Broadcast[Map[String, Int]] =
+    megaHostMap(pages.toDF().select(normalizedUrl.as("url")), numPartitions)
+
+  /** The page url as extraction normalizes it (`ScrapedRow.url`). */
+  private def normalizedUrl: Column = {
+    val normalize = udf((u: String) => graft.urlx.UrlOps.normalizeUrl(if (u == null) "" else u))
+    normalize(col("url"))
   }
+
+  /** Both plans' mega-host maps from one url-only scan, `(shuffle_first,
+    * extract_first)`: the first keyed on the raw url's host, as [[extract]]
+    * computes it, the second on the normalized url's host, as
+    * [[extractFirstMegaMap]] does. Each equals that plan's own map. */
+  private[pipeline] def planMegaHostMaps(pages: Dataset[PageRow], numPartitions: Int)
+      : (Map[String, Int], Map[String, Int]) = {
+    val top = planMegaHostCounts(pages, numPartitions).collect()
+      .map(r => (if (r.getLong(3) == 2L) r.getString(1) else r.getString(0), r.getLong(2), r.getLong(3)))
+    (megaHosts(top, numPartitions, hostGid = 1L, totalGid = 3L),
+      megaHosts(top, numPartitions, hostGid = 2L, totalGid = 3L))
+  }
+
+  /** One aggregate over `url` with three grouping sets: the raw url's host
+    * (grouping id 1), the normalized url's host (id 2) and all rows (id 3).
+    * In each host set at most `numPartitions - 1` groups exceed
+    * `total / numPartitions`, and at most two host rows tie with the total, so
+    * the `2 * numPartitions + 2` largest rows hold both plans' mega-hosts
+    * and the total. Columns: `(__host, __nhost, __n, __gid)`. */
+  private[pipeline] def planMegaHostCounts(pages: Dataset[PageRow], numPartitions: Int): DataFrame =
+    pages.toDF().select(hostCol.as("__host"), hostOf(normalizedUrl).as("__nhost"))
+      .groupingSets(Seq(Seq(col("__host")), Seq(col("__nhost")), Seq.empty), col("__host"), col("__nhost"))
+      .agg(count(lit(1)).as("__n"), grouping_id().as("__gid"))
+      .orderBy(col("__n").desc)
+      .limit(2 * numPartitions + 2)
 
   /** The extract_first Dataset over an already computed mega-host map. */
   private def extractFirstWith(
@@ -388,16 +438,17 @@ object ExtractJob {
     * sample, then the chosen plan. (Bucketed-at-ingest input should call
     * [[extractOnSplits]] directly — no exchange beats either choice.)
     *
-    * The extract_first planning does not need the sample's verdict, so it
-    * runs beside it: while [[chooseVariant]] samples on the caller's thread,
-    * a second driver thread runs the extract_first mega-host pre-pass and
-    * builds that plan's Dataset. The thread carries the caller's job group,
-    * description, job tags, scheduler pool and active session
+    * Both plans need a mega-host pre-pass and neither needs the sample's
+    * verdict to run it, so it runs beside the sample: while [[chooseVariant]]
+    * samples on the caller's thread, a second driver thread computes both
+    * plans' mega-host maps in one url-only aggregate ([[planMegaHostMaps]]),
+    * and the chosen plan uses its map. No work is spent on the plan that is
+    * not chosen. The thread carries the caller's job group, description, job
+    * tags, scheduler pool and active session
     * (`SQLExecution.withThreadLocalCaptured`), so cancelling the caller's
-    * group or tags cancels the pre-pass too. On extract_first the result is
-    * used as is (a pre-pass failure is rethrown here); on shuffle_first the
-    * pre-pass jobs are cancelled, its broadcast is destroyed, and [[extract]]
-    * runs as before. Either way no pre-pass job is running when this
+    * group or tags cancels the pre-pass too. A pre-pass failure is rethrown
+    * here; if the sample fails or the caller is interrupted, the pre-pass
+    * jobs are cancelled. Either way no pre-pass job is running when this
     * returns. Rows equal the explicit plan's. */
   def extractAuto(
       pages: Dataset[PageRow],
@@ -409,52 +460,50 @@ object ExtractJob {
     val spark = pages.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
     val sc = spark.sparkContext
     val tag = s"$PrePassTagPrefix${java.util.UUID.randomUUID()}"
+    // the body never throws: withThreadLocalCaptured restores the pool
+    // thread's properties and session only when its body returns
     val prePass = org.apache.spark.sql.execution.SQLExecution.withThreadLocalCaptured(spark, planThreads) {
-      sc.addJobTag(tag)
-      val mega = extractFirstMegaMap(pages, numPartitions)
-      (mega, extractFirstWith(pages, mega, numPartitions, counters, manifest, runId))
+      try { sc.addJobTag(tag); Right(planMegaHostMaps(pages, numPartitions)) }
+      catch { case e: Throwable => Left(e) }
     }
     val variant =
       try chooseVariant(pages)
       catch { case e: Throwable => abandon(prePass, sc, tag); throw e }
-    if (variant != "extract_first") {
-      abandon(prePass, sc, tag)
-      (variant, extract(pages, numPartitions, counters, manifest, runId))
-    } else
-      try (variant, prePass.get()._2)
-      catch {
-        case e: java.util.concurrent.ExecutionException if e.getCause != null => throw e.getCause
-        case e: InterruptedException => sc.cancelJobsWithTag(tag); throw e
-      }
+    val maps =
+      try prePass.get()
+      catch { case e: InterruptedException => abandon(prePass, sc, tag); throw e }
+    val (shuffleFirstMap, extractFirstMap) = maps.fold(e => throw e, identity)
+    if (variant == "extract_first")
+      (variant, extractFirstWith(pages, sc.broadcast(extractFirstMap), numPartitions, counters, manifest, runId))
+    else
+      (variant, extractWith(pages, sc.broadcast(shuffleFirstMap), numPartitions, counters, manifest, runId))
   }
 
   /** Job-tag prefix of [[extractAuto]]'s concurrent pre-pass jobs. */
-  private[pipeline] val PrePassTagPrefix = "graft-extract-first-prepass-"
+  private[pipeline] val PrePassTagPrefix = "graft-extract-auto-prepass-"
 
   /** Daemon threads for [[extractAuto]]'s concurrent planning, one per
-    * call in flight; idle threads exit after a minute. */
-  private lazy val planThreads: java.util.concurrent.ExecutorService =
+    * call in flight; idle threads exit after a minute. A thread inherits no
+    * thread-local state from the caller that happens to create it (Spark's
+    * local properties and active session are inheritable), so between calls
+    * it holds no job group, tag or session. */
+  private[pipeline] lazy val planThreads: java.util.concurrent.ExecutorService =
     java.util.concurrent.Executors.newCachedThreadPool { (r: Runnable) =>
-      val t = new Thread(r, "graft-extract-auto-plan")
+      val t = new Thread(null, r, "graft-extract-auto-plan", 0L, false)
       t.setDaemon(true)
       t
     }
 
-  /** Cancels an unneeded pre-pass and waits for its thread to finish, then
-    * destroys the broadcast it made. Cancelling by tag reaches only running
-    * jobs, so it repeats until the thread is done: a job started between two
-    * cancels is cancelled by the next. */
-  private def abandon(
-      prePass: java.util.concurrent.CompletableFuture[_ <: (org.apache.spark.broadcast.Broadcast[_], _)],
-      sc: org.apache.spark.SparkContext,
-      tag: String): Unit = {
+  /** Cancels an unneeded pre-pass and waits for its thread to finish.
+    * Cancelling by tag reaches only running jobs, so it repeats until the
+    * thread is done: a job started between two cancels is cancelled by the
+    * next. */
+  private def abandon(prePass: java.util.concurrent.Future[_], sc: org.apache.spark.SparkContext, tag: String): Unit =
     while (!prePass.isDone) {
       sc.cancelJobsWithTag(tag)
       try prePass.get(20, java.util.concurrent.TimeUnit.MILLISECONDS)
-      catch { case _: java.util.concurrent.TimeoutException | _: java.util.concurrent.ExecutionException => }
+      catch { case _: java.util.concurrent.TimeoutException => }
     }
-    if (!prePass.isCompletedExceptionally) prePass.get()._1.destroy()
-  }
 
   private def fusedExtract(
       input: Dataset[(String, Array[Byte])],

@@ -3,22 +3,21 @@ package graft.pipeline
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 import org.apache.spark.{TestBroadcasts, TestListenerBus}
-import org.apache.spark.scheduler.{JobResult, JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{JobSucceeded, SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, udf}
-import org.scalatest.concurrent.Eventually
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.time.{Seconds, Span}
 import org.scalatest.BeforeAndAfterAll
 
 /** Byte-ratio auto plan selection (BASELINE.md plan-order note, VERDICT r3
   * #6): markup-heavy corpora must pick extract_first (the extracted side
   * shuffles fewer bytes), dense-text corpora shuffle_first — and the chosen
-  * plan must produce the same rows as the explicit plans. The extract_first
-  * pre-pass runs on a second driver thread while the sample is taken: its
-  * jobs carry the caller's properties, it is cancelled and cleaned up on
-  * shuffle_first, and its failure surfaces. */
-class ExtractAutoSpec extends AnyFunSuite with BeforeAndAfterAll with Eventually {
+  * plan must produce the same rows as the explicit plans. One mega-host
+  * pre-pass serves both plans and runs on a second driver thread while the
+  * sample is taken: its jobs carry the caller's properties, its maps equal
+  * each plan's own, it is cancelled when the sample fails, and its failure
+  * surfaces. */
+class ExtractAutoSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
 
@@ -55,6 +54,47 @@ class ExtractAutoSpec extends AnyFunSuite with BeforeAndAfterAll with Eventually
     val explicitRows = ExtractJob.extract(pages, 4).collect().map(r => (r.url, r.norm_hash)).toSet
     assert(autoRows == explicitRows)
     assert(autoRows.size == 120)
+    val heavy = PagesGen.generateHeavy(spark, 120)
+    val (heavyVariant, heavyAuto) = ExtractJob.extractAuto(heavy, numPartitions = 4)
+    assert(heavyVariant == "extract_first")
+    assert(heavyAuto.collect().map(r => (r.url, r.norm_hash)).toSet ==
+      ExtractJob.extractFirst(heavy, 4).collect().map(r => (r.url, r.norm_hash)).toSet)
+  }
+
+  test("the one pre-pass aggregate yields each plan's own mega-host map") {
+    val session = spark
+    import session.implicits._
+    // hosts that normalization merges (case, www), a host only the raw url
+    // splits, malformed and null urls, and a long tail of small hosts
+    val mixed =
+      (0 until 40).map(i => s"https://www.MegaHost.com/a$i") ++
+      (0 until 30).map(i => s"https://megahost.com/b$i?utm_source=x") ++
+      (0 until 25).map(i => s"http://WWW.other.org/x$i") ++
+      (0 until 12).map(i => s"not a url $i") ++
+      Seq.fill(6)(null: String) ++
+      (0 until 60).map(i => s"https://tail$i.example/p")
+    // at 8 partitions both host sets hold the most mega-hosts they can (7
+    // each), spelled differently before and after normalization
+    val crowded =
+      (0 until 7).flatMap(h => (0 until 21).map(i => s"https://WWW.Host$h.org/p$i")) ++
+      (0 until 13).map(i => s"https://t$i.example/")
+    def pagesOf(urls: Seq[String]) =
+      urls.map(u => PageRow(u, null, Array.emptyByteArray, "", "en")).toDS().repartition(3)
+    val normalize = udf((u: String) => graft.urlx.UrlOps.normalizeUrl(if (u == null) "" else u))
+    for (urls <- Seq(mixed, crowded); parts <- Seq(1, 2, 3, 4, 8, 64)) {
+      val pages = pagesOf(urls)
+      val (raw, normalized) = ExtractJob.planMegaHostMaps(pages, parts)
+      val wantRaw = ExtractJob.megaHostMap(pages.toDF().select("url"), parts)
+      val wantNormalized = ExtractJob.megaHostMap(pages.toDF().select(normalize(col("url")).as("url")), parts)
+      assert(raw == wantRaw.value, s"shuffle_first map at $parts partitions")
+      assert(normalized == wantNormalized.value, s"extract_first map at $parts partitions")
+      wantRaw.destroy(); wantNormalized.destroy()
+    }
+    val (crowdedRaw, crowdedNormalized) = ExtractJob.planMegaHostMaps(pagesOf(crowded), 8)
+    assert(crowdedRaw.size == 7 && crowdedNormalized.size == 7 && crowdedRaw.keySet != crowdedNormalized.keySet)
+    // the case is not vacuous: the maps differ and both split something
+    val (raw, normalized) = ExtractJob.planMegaHostMaps(pagesOf(mixed), 8)
+    assert(raw.nonEmpty && normalized.nonEmpty && raw != normalized)
   }
 
   /** Runs `body` with a listener that records every job start and end. */
@@ -105,51 +145,64 @@ class ExtractAutoSpec extends AnyFunSuite with BeforeAndAfterAll with Eventually
     assert(!sc.getJobTags().exists(_.startsWith(ExtractJob.PrePassTagPrefix)))
   }
 
-  /** Runs `extractAuto` on a shuffle_first corpus and checks what is left of
-    * the pre-pass when it returns: no pre-pass job started or still running,
-    * and no pre-pass broadcast alive — only `extract`'s own mega-host map is
-    * new. Returns the pre-pass jobs' results. */
-  private def shuffleFirstLeavesNoPrePass(pages: org.apache.spark.sql.Dataset[PageRow]): Seq[JobResult] = {
+  /** The jobs `body` starts on the caller's thread (not tagged as pre-pass). */
+  private def callerJobs(starts: ConcurrentLinkedQueue[SparkListenerJobStart]): Int =
+    starts.asScala.count(e => !isPrePass(e))
+
+  test("shuffle_first uses the concurrent pre-pass: no second aggregate, nothing left running") {
     val sc = spark.sparkContext
+    val pages = PagesGen.generate(spark, 400)
+    val sampleJobs = withJobs { (starts, _) =>
+      ExtractJob.chooseVariant(pages)
+      TestListenerBus.drain(sc)
+      callerJobs(starts)
+    }
     withJobs { (starts, ends) =>
       val before = TestBroadcasts.liveMaps(sc)
       val (variant, _) = ExtractJob.extractAuto(pages, numPartitions = 4)
       val returned = System.currentTimeMillis()
       assert(variant == "shuffle_first")
       TestListenerBus.drain(sc)
+      // the caller ran the sample and nothing else: extract's own mega-host
+      // aggregate was not repeated
+      assert(callerJobs(starts) == sampleJobs)
       val prePass = starts.asScala.filter(isPrePass).toSeq
       val ended = ends.asScala.map(e => e.jobId -> e).toMap
+      assert(prePass.nonEmpty)
       prePass.foreach { e =>
-        assert(e.time <= returned)
-        assert(ended.get(e.jobId).exists(_.time <= returned), s"pre-pass job ${e.jobId} still running")
+        assert(ended.get(e.jobId).exists(j => j.time <= returned && j.jobResult == JobSucceeded),
+          s"pre-pass job ${e.jobId} still running or failed")
       }
-      eventually(timeout(Span(20, Seconds))) {
-        assert((TestBroadcasts.liveMaps(sc) -- before).size == 1)
-      }
-      prePass.map(e => ended(e.jobId).jobResult)
+      // the chosen plan's map is the only new broadcast
+      assert((TestBroadcasts.liveMaps(sc) -- before).size == 1)
     }
   }
 
-  test("shuffle_first: a pre-pass that finished first has its broadcast destroyed") {
+  test("a failed sample cancels the running pre-pass before extractAuto returns") {
     val session = spark
     import session.implicits._
-    // the sample reads html, slowed per row; the pre-pass reads only urls
-    val slowHtml = udf { (h: Array[Byte]) => Thread.sleep(5); h }
-    val pages = PagesGen.generate(spark, 400).withColumn("html", slowHtml(col("html"))).as[PageRow]
-    val results = shuffleFirstLeavesNoPrePass(pages)
-    assert(results.nonEmpty && results.forall(_ == JobSucceeded))
-  }
-
-  test("shuffle_first: a running pre-pass is cancelled before extractAuto returns") {
-    val session = spark
-    import session.implicits._
-    // the sample reads the first 256 rows, all in the first partition; the
-    // pre-pass also reads the slowed urls after them
+    val sc = spark.sparkContext
+    // the sample reads the first 256 rows, all in the first partition, and
+    // meets the failing html; the pre-pass reads only urls, slowed after them
+    val boom = udf { (h: Array[Byte]) => if (h != null) throw new IllegalStateException("sample boom"); h }
     val slowUrl = udf { (u: String) => Thread.sleep(50); u }
-    val ok = PagesGen.generate(spark, 300).coalesce(1)
+    val failing = PagesGen.generate(spark, 300).coalesce(1).withColumn("html", boom(col("html"))).as[PageRow]
     val slow = PagesGen.generate(spark, 100).withColumn("url", slowUrl(col("url"))).as[PageRow]
-    val results = shuffleFirstLeavesNoPrePass(ok.union(slow))
-    assert(results.exists(_ != JobSucceeded))
+    withJobs { (starts, ends) =>
+      val e = intercept[Throwable](ExtractJob.extractAuto(failing.union(slow), numPartitions = 4))
+      val returned = System.currentTimeMillis()
+      assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(t =>
+        String.valueOf(t.getMessage).contains("sample boom")))
+      TestListenerBus.drain(sc)
+      val prePass = starts.asScala.filter(isPrePass).toSeq
+      val ended = ends.asScala.map(j => j.jobId -> j).toMap
+      assert(prePass.nonEmpty)
+      prePass.foreach { j =>
+        assert(j.time <= returned)
+        assert(ended.get(j.jobId).exists(_.time <= returned), s"pre-pass job ${j.jobId} still running")
+      }
+      assert(prePass.exists(j => ended(j.jobId).jobResult != JobSucceeded))
+    }
   }
 
   test("a failure in the concurrent pre-pass surfaces from extractAuto") {
@@ -160,9 +213,20 @@ class ExtractAutoSpec extends AnyFunSuite with BeforeAndAfterAll with Eventually
     val boom = udf { (u: String) => if (u != null) throw new IllegalStateException("pre-pass boom"); u }
     val ok = PagesGen.generateHeavy(spark, 300).coalesce(1)
     val failing = PagesGen.generateHeavy(spark, 40).withColumn("url", boom(col("url"))).as[PageRow]
-    val e = intercept[Throwable](ExtractJob.extractAuto(ok.union(failing), numPartitions = 4))
+    val sc = spark.sparkContext
+    sc.setJobGroup("failing-group", "failing description")
+    val e =
+      try intercept[Throwable](ExtractJob.extractAuto(ok.union(failing), numPartitions = 4))
+      finally sc.clearJobGroup()
     assert(!e.isInstanceOf[java.util.concurrent.ExecutionException])
     assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null).exists(t =>
       String.valueOf(t.getMessage).contains("pre-pass boom")))
+    // the planning thread kept nothing of the failed call: no job group,
+    // tag or active session waits there for the next call
+    val left = ExtractJob.planThreads.submit(new java.util.concurrent.Callable[(Option[String], Option[String], Boolean)] {
+      def call() = (Option(sc.getLocalProperty("spark.jobGroup.id")),
+        Option(sc.getLocalProperty("spark.job.tags")), SparkSession.getActiveSession.isDefined)
+    }).get()
+    assert(left == ((None, None, false)))
   }
 }

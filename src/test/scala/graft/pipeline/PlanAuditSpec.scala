@@ -102,6 +102,11 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     val preScans = "ReadSchema: [^\n]+".r.findAllIn(pre).toList
     assert(preScans.nonEmpty && preScans.forall(r => r.contains("url") && !r.contains("html")),
       s"pre-pass must scan url only:\n$pre")
+    // so must extractAuto's pre-pass, which serves both plans
+    val both = plan(ExtractJob.planMegaHostCounts(pages, 4))
+    val bothScans = "ReadSchema: [^\n]+".r.findAllIn(both).toList
+    assert(bothScans.nonEmpty && bothScans.forall(r => r.contains("url") && !r.contains("html")),
+      s"extractAuto's pre-pass must scan url only:\n$both")
   }
 
   test("embed cache join is an equi-join on cache_key (hash-partitionable)") {
