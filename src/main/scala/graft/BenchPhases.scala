@@ -1,12 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
-import graft.pipeline.{ExtractJob, PageRow, PagesGen}
+import graft.pipeline.{ExtractJob, PagesGen}
 
-/** Dev diagnostic: per-phase wall times of the extraction job (scan, salt
-  * pre-pass, repartition+extract), to separate scaling-relevant compute from
-  * fixed overheads. Not part of the driver contract. */
+/** The raw thread-pool extraction ceiling that `Bench` and perfbench compare
+  * the Spark job against. */
 object BenchPhases {
 
   /** Pre-decoded pages for the raw thread-pool ceiling (no Spark anywhere).
@@ -38,70 +35,5 @@ object BenchPhases {
       futs.foreach(_.get())
       (System.nanoTime() - t0) / 1e9
     } finally pool.shutdown() // non-daemon threads must not outlive a failed run
-  }
-
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val nDocs = sys.env.getOrElse("SPARK_GRAFT_DOCS", "80000").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", "64"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.local.dir", sys.env.getOrElse("SPARK_GRAFT_LOCAL_DIR", "/tmp"))
-      .config("spark.shuffle.compress", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
-      .config("spark.shuffle.spill.compress", sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_COMPRESS", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import spark.implicits._
-
-    val corpusDir = s"target/bench_corpus_$nDocs"
-    if (!new java.io.File(corpusDir + "/_SUCCESS").exists()) {
-      PagesGen.generate(spark, nDocs).repartition(64).write.mode("overwrite").parquet(corpusDir)
-    }
-    val pages = spark.read.parquet(corpusDir).as[PageRow]
-    val parts = sys.env.get("SPARK_GRAFT_PARTS").map(_.toInt).getOrElse(128)
-
-    def time[A](name: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      System.err.println(f"[phase] $name%-22s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    }
-
-    // warm
-    ExtractJob.extract(pages, parts).toDF().count()
-    ExtractJob.extract(pages, parts).toDF().count()
-
-    // raw thread-pool ceiling: same per-row function, no Spark at all
-    val rawDocs = rawCeilingDocs(math.min(nDocs, 40000))
-    def rawPool(threads: Int): Double = rawPoolSec(rawDocs, threads)
-    rawPool(cpus.toInt) // warm
-    (1 to 3).foreach { rep =>
-      System.err.println(s"--- rep $rep (cpus=$cpus) ---")
-      System.err.println(f"[phase] raw-pool(${cpus})       ${rawPool(cpus.toInt)}%6.2f s (${rawDocs.length} docs)")
-      time("scan+count")(pages.count())
-      time("salt-prepass(agg)") {
-        val withHost = pages.toDF().withColumn("__host", ExtractJob.hostCol)
-        withHost.groupBy("__host").count().filter(col("count") > nDocs / parts).collect()
-      }
-      time("repartition-only") {
-        ExtractJob.saltedRepartitionByHost(pages.toDF(), parts).count()
-      }
-      time("full-extract")(ExtractJob.extract(pages, parts).toDF().count())
-      time("extract-no-encoder") {
-        import graft.pipeline.ScrapePipeline
-        ExtractJob.saltedRepartitionByHost(pages.toDF().select("url", "html"), parts)
-          .select("url", "html").as[(String, Array[Byte])]
-          .mapPartitions { it =>
-            var n = 0L
-            it.foreach { case (url, html) =>
-              val r = ScrapePipeline.scrapeHtml(ExtractJob.decodeHtml(html), url)
-              n += r.word_count
-            }
-            Iterator.single(n)
-          }.reduce(_ + _)
-      }
-    }
-    spark.stop()
   }
 }

@@ -35,39 +35,45 @@ object SparkEntry {
   // read again.
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, Dataset[ScrapedRow])]()
 
-  private def evictAll[T](c: java.util.concurrent.ConcurrentHashMap[String, (SparkSession, T)])(
-      unpersist: T => Unit): Unit = {
-    c.values().forEach { case (_, v) => scala.util.Try(unpersist(v)) }
+  private def evictAll[A](c: java.util.concurrent.ConcurrentHashMap[String, (SparkSession, Dataset[A])]): Unit = {
+    c.values().forEach { case (_, v) => scala.util.Try(v.unpersist()) }
     c.clear()
   }
 
-  private def extracted(spark: SparkSession, sfDir: String): Dataset[ScrapedRow] = synchronized {
-    val hit = cache.get(sfDir)
+  /** `c`'s entry for `key` if `spark` made it; otherwise every entry of `c`
+    * is unpersisted and `build`'s result, persisted, becomes the one entry. */
+  private def cached[A](c: java.util.concurrent.ConcurrentHashMap[String, (SparkSession, Dataset[A])],
+                        spark: SparkSession, key: String)(build: => Dataset[A]): Dataset[A] = synchronized {
+    val hit = c.get(key)
     if (hit != null && (hit._1 eq spark)) hit._2
     else {
-      evictAll(cache)(_.unpersist())
-      // the signature/candidate relations derive from the evicted
-      // extraction — drop them in the same breath, or a session that walks
-      // to a new SF dir without running another dedup query keeps them
-      // resident indefinitely
-      evictAll(sigCache)(_.unpersist())
-      evictAll(candCache)(_.unpersist())
-      evictAll(verifiedCache)(_.unpersist())
-      val n = PagesGen.pagesFor(sfDir)
-      val parts = spark.sparkContext.defaultParallelism
-      // SPARK_GRAFT_CORPUS=heavy swaps in the markup-inflated corpus
-      // (real-web ~10:1 markup:text) for the whole *_pages query family —
-      // the per-round byte-ratio probe (VERDICT r4 #7). The driver's
-      // correctness runs never set it, and every oracle-gated fixture query
-      // builds its own corpus explicitly, so the knob can only affect the
-      // rows-only families it exists to probe.
-      val gen =
-        if (sys.env.get("SPARK_GRAFT_CORPUS").contains("heavy")) PagesGen.generateHeavy(spark, n)
-        else PagesGen.generate(spark, n)
-      val ds = ExtractJob.extract(gen, parts).persist()
-      cache.put(sfDir, (spark, ds))
-      ds
+      evictAll(c)
+      val v = build.persist()
+      c.put(key, (spark, v))
+      v
     }
+  }
+
+  private def extracted(spark: SparkSession, sfDir: String): Dataset[ScrapedRow] = cached(cache, spark, sfDir) {
+    // the signature/candidate relations derive from the evicted
+    // extraction — drop them in the same breath, or a session that walks
+    // to a new SF dir without running another dedup query keeps them
+    // resident indefinitely
+    evictAll(sigCache)
+    evictAll(candCache)
+    evictAll(verifiedCache)
+    val n = PagesGen.pagesFor(sfDir)
+    val parts = spark.sparkContext.defaultParallelism
+    // SPARK_GRAFT_CORPUS=heavy swaps in the markup-inflated corpus
+    // (real-web ~10:1 markup:text) for the whole *_pages query family —
+    // the per-round byte-ratio probe (VERDICT r4 #7). The Verify
+    // correctness runs never set it, and every oracle-gated fixture query
+    // builds its own corpus explicitly, so the knob can only affect the
+    // rows-only families it exists to probe.
+    val gen =
+      if (sys.env.get("SPARK_GRAFT_CORPUS").contains("heavy")) PagesGen.generateHeavy(spark, n)
+      else PagesGen.generate(spark, n)
+    ExtractJob.extract(gen, parts)
   }
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
@@ -90,16 +96,8 @@ object SparkEntry {
   private val sigCache = new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
   private val candCache = new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
 
-  private def signatures(spark: SparkSession, sfDir: String): DataFrame = synchronized {
-    val hit = sigCache.get(sfDir)
-    if (hit != null && (hit._1 eq spark)) hit._2
-    else {
-      evictAll(sigCache)(_.unpersist())
-      val df = signaturesFrom(extracted(spark, sfDir)).persist()
-      sigCache.put(sfDir, (spark, df))
-      df
-    }
-  }
+  private def signatures(spark: SparkSession, sfDir: String): DataFrame =
+    cached(sigCache, spark, sfDir)(signaturesFrom(extracted(spark, sfDir)))
 
   /** MinHash estimate-prefilter floor for the exact-Jaccard verify
     * (VERDICT r3 #2): exact shingle-set Jaccard runs ONLY on candidate pairs
@@ -117,16 +115,8 @@ object SparkEntry {
     * are joined back by url once, AFTER pair dedup, and the estimate is
     * computed a single time for all three downstream views (minhash output,
     * jaccard prefilter, survivor prefilter). */
-  private def nearDupCandidates(spark: SparkSession, sfDir: String): DataFrame = synchronized {
-    val hit = candCache.get(sfDir)
-    if (hit != null && (hit._1 eq spark)) hit._2
-    else {
-      evictAll(candCache)(_.unpersist())
-      val pairs = candidatesFrom(signatures(spark, sfDir)).persist()
-      candCache.put(sfDir, (spark, pairs))
-      pairs
-    }
-  }
+  private def nearDupCandidates(spark: SparkSession, sfDir: String): DataFrame =
+    cached(candCache, spark, sfDir)(candidatesFrom(signatures(spark, sfDir)))
 
   /** Signature relation (url, sh3, sig64) for an arbitrary extracted corpus
     * — the ONE definition of the shingle/minhash front half, shared by the
@@ -193,16 +183,8 @@ object SparkEntry {
     * `dedup_jaccard_pages` and `dedup_survivors_pages` each re-ran the
     * shingle-set verify map over the prefiltered candidates — most of the
     * survivors query's 6.9 s bench line was that recomputation. */
-  private def jaccardVerified(s: SparkSession, dir: String): DataFrame = synchronized {
-    val hit = verifiedCache.get(dir)
-    if (hit != null && (hit._1 eq s)) hit._2
-    else {
-      evictAll(verifiedCache)(_.unpersist())
-      val df = verifiedFrom(signatures(s, dir), nearDupCandidates(s, dir)).persist()
-      verifiedCache.put(dir, (s, df))
-      df
-    }
-  }
+  private def jaccardVerified(s: SparkSession, dir: String): DataFrame =
+    cached(verifiedCache, s, dir)(verifiedFrom(signatures(s, dir), nearDupCandidates(s, dir)))
 
   /** SimHash near-dup pairs from a `(url, simhash)` relation — the ONE
     * definition of the chunk-LSH → hamming-verify chain, shared by
@@ -252,16 +234,8 @@ object SparkEntry {
     * buckets are coarse BY DESIGN and occupancy is already pinned — a count
     * cap would suppress every bucket in a degenerate all-dup corpus
     * (exactly the rows a dedup query must surface). */
-  private def embedLshVerified(s: SparkSession, dir: String): DataFrame = synchronized {
-    val hit = embedPairCache.get(dir)
-    if (hit != null && (hit._1 eq s)) hit._2
-    else {
-      evictAll(embedPairCache)(_.unpersist())
-      val pairs = embedLshVerifiedUncached(s, dir).persist()
-      embedPairCache.put(dir, (s, pairs))
-      pairs
-    }
-  }
+  private def embedLshVerified(s: SparkSession, dir: String): DataFrame =
+    cached(embedPairCache, s, dir)(embedLshVerifiedUncached(s, dir))
 
   private def embedLshVerifiedUncached(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._

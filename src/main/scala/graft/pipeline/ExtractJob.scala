@@ -61,9 +61,19 @@ object ExtractJob {
     * input relation even when the relation being repartitioned is the
     * (expensive to recompute) extracted side. */
   def megaHostMap(pages: DataFrame, numPartitions: Int): org.apache.spark.broadcast.Broadcast[Map[String, Int]] =
-    pages.sparkSession.sparkContext.broadcast(
-      megaHosts(megaHostCounts(pages, numPartitions).collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))),
-        numPartitions, hostGid = 0L, totalGid = 1L))
+    pages.sparkSession.sparkContext.broadcast(megaHostMaps(pages, numPartitions, col("url")).head)
+
+  /** One mega-host map per url column in `urls`, from one aggregate
+    * ([[megaHostCounts]]). */
+  private def megaHostMaps(pages: DataFrame, numPartitions: Int, urls: Column*): Seq[Map[String, Int]] = {
+    val n = urls.size
+    val totalGid = (1L << n) - 1
+    val top = megaHostCounts(pages, numPartitions, urls: _*).collect()
+    urls.indices.map { i =>
+      megaHosts(top.map(r => (r.getString(i), r.getLong(n), r.getLong(n + 1))), numPartitions,
+        hostGid = totalGid ^ (1L << (n - 1 - i)), totalGid = totalGid)
+    }
+  }
 
   /** Mega-host map from the largest `(host, count, grouping id)` rows of a
     * host aggregate: the hosts of grouping set `hostGid` whose count
@@ -79,18 +89,23 @@ object ExtractJob {
       .toMap
   }
 
-  /** `(__host, count, grouping_id)` for the `numPartitions + 1` largest
-    * groups of a host rollup; the grouping-id-1 row is the total row count.
-    * At most `numPartitions - 1` hosts can exceed `total / numPartitions`,
-    * so these rows hold every mega-host plus the total. `col("__host")`,
-    * not the bare name: a by-name rollup trips `DetectAmbiguousSelfJoin` on
-    * an anti-joined input. */
-  private[pipeline] def megaHostCounts(pages: DataFrame, numPartitions: Int): DataFrame =
-    pages.select(hostCol.as("__host"))
-      .rollup(col("__host"))
+  /** `(__host0, …, __host{N-1}, __n, __gid)`: one aggregate with a grouping
+    * set for each of the N `urls`' hosts plus the empty set (all rows); for
+    * N = 1 it is `rollup(__host0)`. Set i has grouping id `2^N - 1` minus
+    * bit `N - 1 - i`, the empty set `2^N - 1`. Keeps the
+    * `N * (numPartitions + 1)` largest groups: in each host set at most
+    * `numPartitions - 1` groups exceed `total / numPartitions`, so these
+    * rows hold every set's mega-hosts and the total. `col(name)`, not the
+    * bare name: a by-name grouping trips `DetectAmbiguousSelfJoin` on an
+    * anti-joined input. */
+  private[pipeline] def megaHostCounts(pages: DataFrame, numPartitions: Int, urls: Column*): DataFrame = {
+    val hosts = urls.indices.map(i => col(s"__host$i"))
+    pages.select(urls.zipWithIndex.map { case (u, i) => hostOf(u).as(s"__host$i") }: _*)
+      .groupingSets(hosts.map(Seq(_)) :+ Seq.empty, hosts: _*)
       .agg(count(lit(1)).as("__n"), grouping_id().as("__gid"))
       .orderBy(col("__n").desc)
-      .limit(numPartitions + 1)
+      .limit(urls.size * (numPartitions + 1))
+  }
 
   /** The one salt function: per-url sub-bucket within a mega-host. Shared by
     * the exchange plan ([[applySaltedRepartition]]) and the bucketed-ingest
@@ -321,7 +336,7 @@ object ExtractJob {
     megaHostMap(pages.toDF().select(normalizedUrl.as("url")), numPartitions)
 
   /** The page url as extraction normalizes it (`ScrapedRow.url`). */
-  private def normalizedUrl: Column = {
+  private[pipeline] def normalizedUrl: Column = {
     val normalize = udf((u: String) => graft.urlx.UrlOps.normalizeUrl(if (u == null) "" else u))
     normalize(col("url"))
   }
@@ -332,24 +347,9 @@ object ExtractJob {
     * [[extractFirstMegaMap]] does. Each equals that plan's own map. */
   private[pipeline] def planMegaHostMaps(pages: Dataset[PageRow], numPartitions: Int)
       : (Map[String, Int], Map[String, Int]) = {
-    val top = planMegaHostCounts(pages, numPartitions).collect()
-      .map(r => (if (r.getLong(3) == 2L) r.getString(1) else r.getString(0), r.getLong(2), r.getLong(3)))
-    (megaHosts(top, numPartitions, hostGid = 1L, totalGid = 3L),
-      megaHosts(top, numPartitions, hostGid = 2L, totalGid = 3L))
+    val Seq(raw, normalized) = megaHostMaps(pages.toDF(), numPartitions, col("url"), normalizedUrl)
+    (raw, normalized)
   }
-
-  /** One aggregate over `url` with three grouping sets: the raw url's host
-    * (grouping id 1), the normalized url's host (id 2) and all rows (id 3).
-    * In each host set at most `numPartitions - 1` groups exceed
-    * `total / numPartitions`, and at most two host rows tie with the total, so
-    * the `2 * numPartitions + 2` largest rows hold both plans' mega-hosts
-    * and the total. Columns: `(__host, __nhost, __n, __gid)`. */
-  private[pipeline] def planMegaHostCounts(pages: Dataset[PageRow], numPartitions: Int): DataFrame =
-    pages.toDF().select(hostCol.as("__host"), hostOf(normalizedUrl).as("__nhost"))
-      .groupingSets(Seq(Seq(col("__host")), Seq(col("__nhost")), Seq.empty), col("__host"), col("__nhost"))
-      .agg(count(lit(1)).as("__n"), grouping_id().as("__gid"))
-      .orderBy(col("__n").desc)
-      .limit(2 * numPartitions + 2)
 
   /** The extract_first Dataset over an already computed mega-host map. */
   private def extractFirstWith(
@@ -567,19 +567,9 @@ object ExtractJob {
    * Checkpointed, resumable run (north rule): skips urls already present in
    * `outDir` via a left-anti join on the checkpoint's url set (column-pruned
    * read), appends new results, and writes the per-partition manifest.
-   *
-   * `bloomExpectedDone > 0` routes the skip through
-   * [[Frontier.unseenByBloom]]: the anti-join's candidate side carries the
-   * FULL page rows (html binary included), so on a mostly-fresh rerun the
-   * plain shape shuffles the whole corpus to discover almost nothing is
-   * done. The bloom path trades that shuffle for a second narrow pass over
-   * the input scan — only might-done rows (true resumed urls + ~fpp false
-   * positives) ride the verify join. Output rows are identical either way
-   * (no false negatives), pinned by SparkJobSpec.
    */
   def runResumable(spark: SparkSession, pages: Dataset[PageRow], outDir: String,
-                   numPartitions: Int, runId: String,
-                   bloomExpectedDone: Long = 0L): ManifestSummary = {
+                   numPartitions: Int, runId: String): ManifestSummary = {
     import spark.implicits._
     // checkpoint detection through the SAME filesystem abstraction the
     // reads/writes use — a java.io.File check is false for scheme-qualified
@@ -590,10 +580,7 @@ object ExtractJob {
     val todo: Dataset[PageRow] =
       if (hfs.exists(dataPath)) {
         val done = spark.read.parquet(dataPath.toString).select("url")
-        if (bloomExpectedDone > 0L)
-          Frontier.unseenByBloom(pages.toDF(), done, "url", bloomExpectedDone)
-            .as[PageRow]
-        else pages.join(done, Seq("url"), "left_anti").as[PageRow]
+        pages.join(done, Seq("url"), "left_anti").as[PageRow]
       } else pages
 
     val counters = newCounters(spark)

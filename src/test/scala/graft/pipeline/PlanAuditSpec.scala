@@ -98,12 +98,12 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"unused columns not pruned from the shuffled scan: $mainScan")
     // the mega-host pre-pass runs as its own eager job on the same input:
     // its scan must read url only
-    val pre = plan(ExtractJob.megaHostCounts(pages.toDF().select("url", "html"), 4))
+    val pre = plan(ExtractJob.megaHostCounts(pages.toDF().select("url", "html"), 4, col("url")))
     val preScans = "ReadSchema: [^\n]+".r.findAllIn(pre).toList
     assert(preScans.nonEmpty && preScans.forall(r => r.contains("url") && !r.contains("html")),
       s"pre-pass must scan url only:\n$pre")
     // so must extractAuto's pre-pass, which serves both plans
-    val both = plan(ExtractJob.planMegaHostCounts(pages, 4))
+    val both = plan(ExtractJob.megaHostCounts(pages.toDF(), 4, col("url"), ExtractJob.normalizedUrl))
     val bothScans = "ReadSchema: [^\n]+".r.findAllIn(both).toList
     assert(bothScans.nonEmpty && bothScans.forall(r => r.contains("url") && !r.contains("html")),
       s"extractAuto's pre-pass must scan url only:\n$both")

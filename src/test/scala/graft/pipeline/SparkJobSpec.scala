@@ -93,26 +93,6 @@ class SparkJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(manifest.forall(m => m.run_id == "run1" || m.run_id == "run2"))
   }
 
-  test("resumable run via the Bloom-prefiltered skip matches the exact path") {
-    val out = java.nio.file.Files.createTempDirectory("graft_ckpt_bloom").toString
-    val pages = PagesGen.generate(spark, 60)
-    val s1 = ExtractJob.runResumable(spark, pages, out, 4, "run1")
-    assert(s1.pagesParsed == 60)
-    // partial resume: 30 new pages mixed with the 60 done ones — only the
-    // new 30 may extract, none of the done 60 may re-append (no false
-    // negatives: a done url can never sneak past the bloom)
-    val mixed = pages.union(PagesGen.generate(spark, 90).filter(p => {
-      val n = p.url.reverse.takeWhile(_.isDigit).reverse
-      n.nonEmpty && n.toInt >= 60
-    }))
-    val s2 = ExtractJob.runResumable(spark, mixed, out, 4, "run2",
-      bloomExpectedDone = 1024L)
-    assert(s2.pagesParsed == 30, s"bloom resume parsed ${s2.pagesParsed}")
-    val data = spark.read.parquet(out + "/data")
-    assert(data.count() == 90)
-    assert(data.select("url").distinct().count() == 90)
-  }
-
   test("counters: pages_parsed / parse_failures / empty_content") {
     val counters = ExtractJob.newCounters(spark)
     ExtractJob.extract(PagesGen.generate(spark, 50), 4, Some(counters)).toDF().count()
