@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.ops.{RepetitionOps, TextOps, VectorOps}
+import graft.ops.{DedupOps, RepetitionOps, TextOps, VectorOps}
 import graft.pipeline._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -61,7 +61,6 @@ object SparkEntry {
     // resident indefinitely
     evictAll(sigCache)
     evictAll(candCache)
-    evictAll(verifiedCache)
     val n = PagesGen.pagesFor(sfDir)
     val parts = spark.sparkContext.defaultParallelism
     // SPARK_GRAFT_CORPUS=heavy swaps in the markup-inflated corpus
@@ -81,11 +80,12 @@ object SparkEntry {
 
   // Shared near-dup relations (VERDICT r2 nit): ONE pass over `extracted()`
   // computes the 3-gram shingle hash set AND its minhash-64 signature; ONE
-  // banded LSH self-join produces the candidate pairs both queries verify —
-  // dedup_minhash estimates similarity from signature agreement,
-  // dedup_jaccard verifies exactly on the shingle sets. The classic
-  // LSH → estimate → verify pipeline as two views over shared persisted
-  // relations instead of two independent recomputations.
+  // DedupOps chain over it — 16 bands × 4 slots, mega-bucket suppression,
+  // payload-free self-join, estimate + exact Jaccard (`verifyPairs`) —
+  // scores the candidate pairs all three queries read: dedup_minhash keeps
+  // the estimate, dedup_jaccard and dedup_survivors the exactly verified
+  // pairs. The same chain as Curate and IncrementalDedup, so an
+  // empty-shingle doc is never a candidate (`explodeBands`).
   //
   // DELIBERATE semantic unification vs round 2: sharing needs one shingle
   // set, so minhash now estimates 3-gram Jaccard (r2: 5-gram — more
@@ -97,94 +97,38 @@ object SparkEntry {
   private val candCache = new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
 
   private def signatures(spark: SparkSession, sfDir: String): DataFrame =
-    cached(sigCache, spark, sfDir)(signaturesFrom(extracted(spark, sfDir)))
+    cached(sigCache, spark, sfDir)(DedupOps.minhashSignatures(
+      extracted(spark, sfDir).toDF(), "url", "normalized_text", 3, 64))
 
-  /** MinHash estimate-prefilter floor for the exact-Jaccard verify
-    * (VERDICT r3 #2): exact shingle-set Jaccard runs ONLY on candidate pairs
-    * whose signature-agreement estimate ≥ 0.8 − ε with ε = 0.25. With 64
-    * signature slots, `est ~ Binomial(64, J)/64`, so for a true pair at the
-    * J = 0.8 verify threshold P[est < 0.55] ≈ Φ(−4.9) ≈ 5e-7 — the
-    * prefilter changes no output row in practice (DedupOpsSpec pins the
-    * estimate-vs-exact agreement property), while skipping the O(|shingles|)
-    * exact merge for the great mass of low-similarity band collisions. */
-  private val JaccardPrefilterFloor = 0.55
-
-  /** Banded-LSH candidate pairs over the shared signatures — 16 bands × 4
-    * slots, mega-bucket suppression, payload-free self-join (DedupOps) —
-    * WITH the signature-agreement estimate attached: the 512 B signatures
-    * are joined back by url once, AFTER pair dedup, and the estimate is
-    * computed a single time for all three downstream views (minhash output,
-    * jaccard prefilter, survivor prefilter). */
+  /** The scored candidates over the shared signatures, persisted: their
+    * rows are exactly `dedup_minhash_pages`' rows, and the exact Jaccard
+    * rides along, so the verified views are filters over this relation. */
   private def nearDupCandidates(spark: SparkSession, sfDir: String): DataFrame =
-    cached(candCache, spark, sfDir)(candidatesFrom(signatures(spark, sfDir)))
+    cached(candCache, spark, sfDir)(scoredPairs(signatures(spark, sfDir)))
 
-  /** Signature relation (url, sh3, sig64) for an arbitrary extracted corpus
-    * — the ONE definition of the shingle/minhash front half, shared by the
-    * sfDir-cached path and the fixed-corpus fixture chain. */
-  private def signaturesFrom(extractedDs: Dataset[ScrapedRow]): DataFrame = {
-    val spark = extractedDs.sparkSession
-    import spark.implicits._
-    extractedDs.map { r =>
-      val (sh3, sig64) = TextOps.shingleHashSig(r.normalized_text, 3, 64)
-      (r.url, sh3, sig64)
-    }.toDF("url", "sh3", "sig64")
+  /** `(url_a, url_b, est_jaccard, jaccard)` for every banded-LSH candidate
+    * pair with estimate ≥ 0.5, the minhash query's threshold (no Jaccard
+    * floor). Both similarities are rounded to 5 decimals so all views agree
+    * at the threshold boundary; the estimate is a multiple of 1/64, so the
+    * rounded and the raw estimate agree on the 0.5 and 0.55 floors. */
+  private def scoredPairs(sigs: DataFrame): DataFrame = {
+    val round5 = udf((x: Double) => math.round(x * 100000) / 100000.0)
+    DedupOps.verifyPairs(DedupOps.candidatePairs(DedupOps.explodeBands(sigs, 4),
+        Seq("band_idx", "band_key"), "id"), sigs, sigs, estFloor = 0.5, threshold = 0.0)
+      .select(col("id_a").as("url_a"), col("id_b").as("url_b"),
+        round5(col("est")).as("est_jaccard"), round5(col("jaccard")).as("jaccard"))
   }
 
-  /** Banded-LSH candidates + signature-agreement estimate from a signature
-    * relation (the ONE definition of the candidate middle stage). */
-  private def candidatesFrom(sigs: DataFrame): DataFrame = {
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    val bands = sigs.select("url", "sig64")
-      .as[(String, Array[Long])].flatMap { case (url, sig) =>
-        TextOps.lshBands(sig, 4).zipWithIndex.map { case (b, i) => (url, i, b) }
-      }.toDF("url", "band_idx", "band_key")
-    val pairs0 = graft.ops.DedupOps.candidatePairs(bands, Seq("band_idx", "band_key"), "url")
-      .withColumnRenamed("id_a", "url_a").withColumnRenamed("id_b", "url_b")
-    val sigCols = sigs.select(col("url"), col("sig64"))
-    pairs0
-      .join(sigCols.select(col("url").as("url_a"), col("sig64").as("sig_a")), "url_a")
-      .join(sigCols.select(col("url").as("url_b"), col("sig64").as("sig_b")), "url_b")
-      .select("url_a", "url_b", "sig_a", "sig_b")
-      .as[(String, String, Array[Long], Array[Long])]
-      .map { case (a, b, sa, sb) =>
-        (a, b, math.round(TextOps.minHashSimilarity(sa, sb) * 100000) / 100000.0)
-      }
-      .toDF("url_a", "url_b", "est_jaccard")
-  }
-
-  /** The shared verify stage of the jaccard / survivor queries: candidates
-    * → minhash-estimate prefilter (≥ [[JaccardPrefilterFloor]]) → exact
-    * shingle-set Jaccard on the survivors of the prefilter only. Shingle
-    * sets ship as distinct-sorted 64-bit hashes (8 B/shingle vs ~40-char
-    * strings) — exact Jaccard modulo 64-bit collisions. The 5-decimal
-    * rounding is shared so all views agree at the threshold boundary. */
-  private def verifiedFrom(sigs: DataFrame, cands: DataFrame): DataFrame = {
-    val spark = sigs.sparkSession
-    import spark.implicits._
-    val shingled = sigs.select(col("url"), col("sh3").as("shingles"))
-    cands
-      .filter(col("est_jaccard") >= JaccardPrefilterFloor)
-      .join(shingled.select(col("url").as("url_a"), col("shingles").as("sh_a")), "url_a")
-      .join(shingled.select(col("url").as("url_b"), col("shingles").as("sh_b")), "url_b")
-      .select("url_a", "url_b", "sh_a", "sh_b")
-      .as[(String, String, Array[Long], Array[Long])]
-      .map { case (a, b, sa, sb) =>
-        (a, b, math.round(TextOps.jaccardSorted(sa, sb) * 100000) / 100000.0)
-      }
-      .toDF("url_a", "url_b", "jaccard")
-      .filter(col("jaccard") >= 0.8)
-  }
-
-  private val verifiedCache = new java.util.concurrent.ConcurrentHashMap[String, (SparkSession, DataFrame)]()
-
-  /** Exact-verified near-dup pairs behind the same one-entry persist cache
-    * as the relations they derive from (VERDICT r4 #2): without it,
-    * `dedup_jaccard_pages` and `dedup_survivors_pages` each re-ran the
-    * shingle-set verify map over the prefiltered candidates — most of the
-    * survivors query's 6.9 s bench line was that recomputation. */
-  private def jaccardVerified(s: SparkSession, dir: String): DataFrame =
-    cached(verifiedCache, s, dir)(verifiedFrom(signatures(s, dir), nearDupCandidates(s, dir)))
+  /** Exactly verified pairs `(url_a, url_b, jaccard)` of scored pairs: an
+    * estimate prefilter, then exact Jaccard ≥ 0.8. The prefilter
+    * (VERDICT r3 #2) keeps a pair only if its estimate ≥ 0.8 − ε with
+    * ε = 0.25. With 64 signature slots, `est ~ Binomial(64, J)/64`, so for a
+    * true pair at the J = 0.8 verify threshold P[est < 0.55] ≈ Φ(−4.9) ≈
+    * 5e-7 — it changes no output row in practice (DedupOpsSpec pins the
+    * estimate-vs-exact agreement property). */
+  private def verified(scored: DataFrame): DataFrame =
+    scored.filter(col("est_jaccard") >= 0.55 && col("jaccard") >= 0.8)
+      .select("url_a", "url_b", "jaccard")
 
   /** SimHash near-dup pairs from a `(url, simhash)` relation — the ONE
     * definition of the chunk-LSH → hamming-verify chain, shared by
@@ -271,7 +215,6 @@ object SparkEntry {
       timed("extracted")(extracted(spark, sfDir).count()),
       timed("signatures")(signatures(spark, sfDir).count()),
       timed("candidates")(nearDupCandidates(spark, sfDir).count()),
-      timed("jaccard_verified")(jaccardVerified(spark, sfDir).count()),
       timed("embed_lsh_pairs")(embedLshVerified(spark, sfDir).count()))
   }
 
@@ -494,14 +437,11 @@ object SparkEntry {
     "dedup_minhash_pages" -> ((s, dir) => {
       // shingle → minhash → LSH band → bucket join → estimated near-dup pairs.
       // Shuffle hygiene at 100 TB: the band self-join relation carries ONLY
-      // (band_idx, band_key, url) — the 64-slot signatures (512 B each) are
-      // re-attached by url AFTER candidate pairs are deduped, so they never
-      // ride the quadratic part of the shuffle. The shared candidate relation
-      // already carries the signature-agreement estimate (computed once for
-      // this query, the jaccard prefilter, and the survivor prefilter), so
-      // this query is a pure filter over it.
-      nearDupCandidates(s, dir)
-        .filter(col("est_jaccard") >= 0.5)
+      // (band_idx, band_key, id) — the 64-slot signatures (512 B each) are
+      // re-attached by id AFTER candidate pairs are deduped, so they never
+      // ride the quadratic part of the shuffle. The shared scored relation
+      // holds exactly this query's pairs.
+      nearDupCandidates(s, dir).select("url_a", "url_b", "est_jaccard")
         .orderBy("url_a", "url_b")
     }),
 
@@ -513,8 +453,8 @@ object SparkEntry {
     // verify only on candidates, O(log diameter) CC rounds on id-only
     // relations.
     "dedup_survivors_pages" -> ((s, dir) => {
-      graft.ops.DedupOps.clusterRepresentatives(
-          jaccardVerified(s, dir).select("url_a", "url_b"), "url_a", "url_b")
+      DedupOps.clusterRepresentatives(
+          verified(nearDupCandidates(s, dir)).select("url_a", "url_b"), "url_a", "url_b")
         .withColumn("is_survivor", col("id") === col("label"))
         .toDF("url", "cluster_rep", "is_survivor")
         .orderBy("url")
@@ -522,8 +462,8 @@ object SparkEntry {
 
     "dedup_jaccard_pages" -> ((s, dir) =>
       // n-gram Jaccard near-dup: shared LSH candidates → minhash-estimate
-      // prefilter → EXACT shingle-set Jaccard verify (see jaccardVerified)
-      jaccardVerified(s, dir).orderBy("url_a", "url_b")),
+      // prefilter → EXACT shingle-set Jaccard verify (see verified)
+      verified(nearDupCandidates(s, dir)).orderBy("url_a", "url_b")),
 
     // The survivor chain END-TO-END behind a driver oracle (VERDICT r3 #3):
     // the SAME extract → shingle → minhash → band → candidates → estimate
@@ -535,9 +475,10 @@ object SparkEntry {
     // numeric-minimum member as survivor — a generate_series DuckDB oracle,
     // independent of the LSH/CC machinery it checks.
     "dedup_survivors_fixture" -> ((s, dir) => {
-      val sigs = signaturesFrom(ExtractJob.extractOnSplits(PagesGen.generate(s, 600)))
-      val verified = verifiedFrom(sigs, candidatesFrom(sigs)).select("url_a", "url_b")
-      val labels = graft.ops.DedupOps.clusterRepresentatives(verified, "url_a", "url_b")
+      val sigs = DedupOps.minhashSignatures(
+        ExtractJob.extractOnSplits(PagesGen.generate(s, 600)).toDF(), "url", "normalized_text", 3, 64)
+      val labels = DedupOps.clusterRepresentatives(
+          verified(scoredPairs(sigs)).select("url_a", "url_b"), "url_a", "url_b")
         .withColumn("doc_idx", regexp_extract(col("id"), "post-(\\d+)$", 1).cast("long"))
       // re-key the cluster representative to the NUMERIC minimum member:
       // CC labels are min-URL (string order depends on the generated hosts),

@@ -21,23 +21,12 @@ import org.apache.spark.sql.functions._
 object DedupOps {
 
   /**
-   * Candidate pairs from an LSH band/bucket relation.
-   *
-   * @param bands     relation with columns (`idCol`, bucket columns…)
-   * @param bucketCols the bucket key columns (e.g. band_idx+band_key, or
-   *                   table+bucket)
-   * @param idCol     row-identity column name (url / vec_id)
-   * @param maxBucket suppression threshold (buckets larger than this are
-   *                  dropped before the self-join)
-   * @return distinct (id_a, id_b) with id_a < id_b
-   */
-  /**
    * MinHash signature relation `(id, sh, sig)` over `(idCol, textCol)` rows:
    * `sh` = distinct sorted 64-bit shingle hashes (the exact-Jaccard payload),
    * `sig` = k-permutation MinHash signature. One narrow map — the single
-   * signature pass both the curation ([[graft.pipeline.Curate]]) and the
-   * incremental ([[IncrementalDedup]]) dedup chains start from, extracted
-   * here so the two chains cannot drift.
+   * signature pass the curation ([[graft.pipeline.Curate]]), incremental
+   * ([[IncrementalDedup]]) and `dedup_*_pages` ([[graft.SparkEntry]]) chains
+   * start from, extracted here so the chains cannot drift.
    */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
                         shingleN: Int, minhashK: Int): DataFrame = {
@@ -79,6 +68,12 @@ object DedupOps {
    * on pairs the signature already rules out), keep pairs with exact shingle
    * Jaccard ≥ `threshold`. `leftSigs`/`rightSigs` may be the same frame
    * (in-corpus self-dedup) or different frames (batch vs history).
+   *
+   * @return `(id_a, id_b, est, jaccard)`: `est` is the unrounded
+   *         signature-agreement estimate (`TextOps.minHashSimilarity`, a
+   *         multiple of 1/k, ≥ `estFloor`) and `jaccard` the unrounded
+   *         exact shingle-set Jaccard (`TextOps.jaccardSorted`, ≥
+   *         `threshold`)
    */
   def verifyPairs(pairs: DataFrame, leftSigs: DataFrame, rightSigs: DataFrame,
                   estFloor: Double, threshold: Double): DataFrame = {
@@ -91,11 +86,16 @@ object DedupOps {
         col("sig").as("sig_b")), "id_b")
       .select("id_a", "id_b", "sh_a", "sig_a", "sh_b", "sig_b")
       .as[(String, String, Array[Long], Array[Long], Array[Long], Array[Long])]
-      .flatMap { case (a, b, sha, siga, shb, sigb) =>
-        if (TextOps.minHashSimilarity(siga, sigb) < estFloor) None
-        else if (TextOps.jaccardSorted(sha, shb) < threshold) None
-        else Some((a, b))
-      }.toDF("id_a", "id_b")
+      // a typed map + column filter keeps this stage in whole-stage codegen;
+      // a flatMap runs an interpreted deserializer whose expression tree
+      // (~100 KB) ships with every task that scans a relation persisted from
+      // this output. Below the floor the exact Jaccard is never computed; the
+      // 0.0 placeholder is dropped by the `est` filter.
+      .map { case (a, b, sha, siga, shb, sigb) =>
+        val est = TextOps.minHashSimilarity(siga, sigb)
+        (a, b, est, if (est < estFloor) 0.0 else TextOps.jaccardSorted(sha, shb))
+      }.toDF("id_a", "id_b", "est", "jaccard")
+      .filter(col("est") >= estFloor && col("jaccard") >= threshold)
   }
 
   /** THE mega-bucket suppression rule, defined once: drop every band row
@@ -107,10 +107,11 @@ object DedupOps {
     * threshold comparison. */
   def suppressMegaBuckets(bands: DataFrame, bucketCols: Seq[String],
                           maxBucket: Int): DataFrame = {
-    // Int.MaxValue disables suppression by contract (every count passes the
-    // filter) — skip the count aggregate + self-join entirely instead of
-    // paying two exchanges for an identity transform (the embedding-LSH
-    // chain always runs with suppression off; r8, guide §2.4)
+    // Int.MaxValue disables suppression at ANY bucket size — skip the count
+    // aggregate + self-join entirely instead of paying two exchanges for an
+    // identity transform (the embedding-LSH chain always runs with
+    // suppression off). The Long `count <= maxBucket` filter this replaces
+    // differed only for a bucket above 2^31 members, which it dropped.
     if (maxBucket == Int.MaxValue) return bands
     val keyCols = bucketCols.map(col)
     val smallKeys = bands.groupBy(keyCols: _*).count()
@@ -118,6 +119,17 @@ object DedupOps {
     bands.join(smallKeys, bucketCols)
   }
 
+  /**
+   * Candidate pairs from an LSH band/bucket relation.
+   *
+   * @param bands     relation with columns (`idCol`, bucket columns…)
+   * @param bucketCols the bucket key columns (e.g. band_idx+band_key, or
+   *                   table+bucket)
+   * @param idCol     row-identity column name (url / vec_id)
+   * @param maxBucket suppression threshold (buckets larger than this are
+   *                  dropped before the self-join)
+   * @return distinct (id_a, id_b) with id_a < id_b
+   */
   def candidatePairs(
       bands: DataFrame,
       bucketCols: Seq[String],

@@ -462,11 +462,21 @@ $name AS (SELECT $c, xor(z, z >> 31) AS mix FROM ${name}_e)"""
     * HERE (in `wl`), mirroring `TextOps.shingles`' own
     * `toLowerCase(Locale.ROOT)` — callers pass raw text.
     *
-    * @param includeEmptyDocs SparkEntry's `candidatesFrom` bands EVERY doc
-    *   (empty shingle sets share the all-sentinel signature and pair with
-    *   each other); [[graft.ops.DedupOps.explodeBands]] EXCLUDES them.
-    * @param estRound whether the estimate is 5-decimal rounded
-    *   (`candidatesFrom`) or raw (`DedupOps.verifyPairs`).
+    * @param includeEmptyDocs `true` bands EVERY doc: an empty shingle set
+    *   gets the all-sentinel signature, so all empty docs pair with each
+    *   other at Jaccard 1.0. The `dedup_*_pages` oracles ([[lshPrefix]])
+    *   replay this rule. `false` replays [[graft.ops.DedupOps.explodeBands]],
+    *   which emits no bands for an empty shingle set; the curation oracle
+    *   uses it. The Spark side runs `explodeBands` for every family. The two
+    *   rules still agree on PagesGen corpora, because every page has at
+    *   least three paragraphs: 0 pages have an empty shingle set at sf0.001,
+    *   sf0.01 and sf0.1 (400, 2000 and 20000 pages) and in the 600-page
+    *   survivor fixture, so the extra rule never fires there. Both stay
+    *   because the oracleSql strings do not change.
+    * @param estRound `true` rounds the estimate to 5 decimals, as the
+    *   `dedup_minhash_pages` output does; at the 0.5 and 0.55 floors the
+    *   rounded and raw estimates (multiples of 1/64) agree. `false` keeps it
+    *   raw, as `DedupOps.verifyPairs` compares it (the curation oracle).
     * @param materialized mark the multiply-referenced CTEs (docsh, sigl,
     *   est) MATERIALIZED. DuckDB inlines plain CTEs, so in a DEEP
     *   composition (the curation replay) every reference re-executes the

@@ -87,22 +87,15 @@ class DedupOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(labels.forall(_._2 == 0L))
   }
 
-  test("minhash estimate agrees with exact jaccard: the 0.55 prefilter floor drops no J>=0.8 pair") {
-    // The dedup_jaccard prefilter (SparkEntry.JaccardPrefilterFloor) verifies
-    // exactly only pairs whose 64-slot signature-agreement estimate >= 0.55.
-    // Property over a deterministic similarity sweep: every pair whose exact
-    // shingle-set Jaccard >= 0.8 estimates >= 0.55 (no dropped verified
-    // pair), and the estimate tracks exact Jaccard closely on average.
+  /** A seeded similarity sweep: 60 (base, mutated) text pairs whose 3-gram
+    * Jaccard runs from ~1.0 down to ~0.2. */
+  private def similaritySweep(): Seq[(String, String)] = {
     val rnd = new scala.util.Random(42)
     val lexicon = Array("spark", "shuffle", "partition", "extract", "corpus",
       "anchor", "table", "vector", "token", "density", "salt", "manifest",
       "stream", "quality", "window", "schema", "batch", "cosine", "chunk", "label")
     def doc(words: Int): Array[String] = Array.fill(words)(lexicon(rnd.nextInt(lexicon.length)))
-    var maxErr = 0.0
-    var sumErr = 0.0
-    var n = 0
-    var verifiedSeen = 0
-    (0 until 60).foreach { _ =>
+    (0 until 60).map { _ =>
       val base = doc(120 + rnd.nextInt(120))
       // mutate a sliding fraction of words: similarity sweeps ~1.0 → ~0.2
       val mutFrac = rnd.nextDouble() * 0.5
@@ -110,8 +103,21 @@ class DedupOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       (0 until (base.length * mutFrac).toInt).foreach { _ =>
         mutated(rnd.nextInt(base.length)) = lexicon(rnd.nextInt(lexicon.length))
       }
-      val ta = base.mkString(" ")
-      val tb = mutated.mkString(" ")
+      (base.mkString(" "), mutated.mkString(" "))
+    }
+  }
+
+  test("minhash estimate agrees with exact jaccard: the 0.55 prefilter floor drops no J>=0.8 pair") {
+    // The estimate prefilter of SparkEntry's exactly verified near-dup pairs
+    // keeps only pairs whose 64-slot signature-agreement estimate >= 0.55.
+    // Property over a deterministic similarity sweep: every pair whose exact
+    // shingle-set Jaccard >= 0.8 estimates >= 0.55 (no dropped verified
+    // pair), and the estimate tracks exact Jaccard closely on average.
+    var maxErr = 0.0
+    var sumErr = 0.0
+    var n = 0
+    var verifiedSeen = 0
+    similaritySweep().foreach { case (ta, tb) =>
       val sa = TextOps.shingles(ta, 3); val sb = TextOps.shingles(tb, 3)
       val exact = TextOps.jaccardSorted(TextOps.shingleHashes(sa), TextOps.shingleHashes(sb))
       val est = TextOps.minHashSimilarity(TextOps.minHash(sa, 64), TextOps.minHash(sb, 64))
@@ -125,6 +131,36 @@ class DedupOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     assert(verifiedSeen >= 5, s"sweep must exercise the verify region (saw $verifiedSeen)")
     assert(sumErr / n < 0.1, f"estimate should track exact jaccard (mean |err| = ${sumErr / n}%.3f)")
+  }
+
+  test("verifyPairs emits the raw estimate and exact Jaccard, keeping est == estFloor") {
+    val s = spark
+    import s.implicits._
+    val sweep = similaritySweep().zipWithIndex
+    val docs = sweep.flatMap { case ((ta, tb), i) => Seq((s"a-$i", ta), (s"b-$i", tb)) }
+      .toDF("id", "text")
+    val sigs = DedupOps.minhashSignatures(docs, "id", "text", 3, 64)
+    val pairs = sweep.map { case (_, i) => (s"a-$i", s"b-$i") }.toDF("id_a", "id_b")
+    val local = sweep.map { case ((ta, tb), i) =>
+      val (sha, siga) = TextOps.shingleHashSig(ta, 3, 64)
+      val (shb, sigb) = TextOps.shingleHashSig(tb, 3, 64)
+      (s"a-$i", s"b-$i") -> (TextOps.minHashSimilarity(siga, sigb), TextOps.jaccardSorted(sha, shb))
+    }.toMap
+    // floors taken from the sweep itself, so one pair sits exactly on estFloor
+    val threshold = 0.3
+    val estFloor = local.values.filter(_._2 >= threshold).map(_._1).toSeq.sorted
+      .apply(local.values.count(_._2 >= threshold) / 2)
+    val expected = local.filter { case (_, (e, j)) => e >= estFloor && j >= threshold }
+    assert(expected.values.exists(_._1 == estFloor), "sweep must put a kept pair on estFloor")
+    assert(expected.size < local.size, "the floors must drop part of the sweep")
+
+    val got = DedupOps.verifyPairs(pairs, sigs, sigs, estFloor, threshold)
+      .as[(String, String, Double, Double)].collect()
+    assert(got.map(r => (r._1, r._2)).toSet == expected.keySet)
+    got.foreach { case (a, b, est, jaccard) =>
+      assert(est == local((a, b))._1 && jaccard == local((a, b))._2, s"($a, $b) scored ($est, $jaccard)")
+      assert(est >= estFloor && jaccard >= threshold, s"($a, $b) below a floor")
+    }
   }
 
   test("clusterRepresentatives: matches union-find ground truth on seeded random graphs") {
