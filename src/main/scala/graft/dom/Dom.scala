@@ -39,6 +39,45 @@ sealed trait Node {
 
 final class TextNode(var data: String) extends Node {
   def deepClone(): Node = new TextNode(data)
+
+  // the summary of `summarized`, which is `data` until `data` is replaced
+  private var summarized: String = _
+  private var summary = 0L
+
+  /** `data`'s JS-whitespace summary ([[TextNode.summarize]]), computed once
+    * per `data` string: inner-text lengths read each text node once per
+    * enclosing list, heading, link and scoring candidate. */
+  def jsWsSummary: Long = {
+    val d = data
+    if (d ne summarized) { summary = TextNode.summarize(d); summarized = d }
+    summary
+  }
+}
+
+object TextNode {
+  /** Flag of a [[TextNode.summarize]] summary: the text starts with JS whitespace. */
+  final val LeadingWs = 1L << 32
+  /** Flag of a [[TextNode.summarize]] summary: the text ends with JS whitespace. */
+  final val TrailingWs = 1L << 33
+
+  /** The length of `d` trimmed of JS whitespace with each inner whitespace
+    * run counted as 1 (the low 32 bits; 0 for empty or all-whitespace
+    * text, which is all-whitespace when it has [[LeadingWs]]), plus the
+    * [[LeadingWs]] and [[TrailingWs]] flags. */
+  private def summarize(d: String): Long = {
+    var len = 0L
+    var ws = false
+    var i = 0
+    while (i < d.length) {
+      if (graft.util.Js.isJsWs(d.charAt(i))) ws = true
+      else { if (ws && len > 0) len += 1; ws = false; len += 1 }
+      i += 1
+    }
+    if (d.isEmpty) 0L
+    else len |
+      (if (graft.util.Js.isJsWs(d.charAt(0))) LeadingWs else 0L) |
+      (if (ws) TrailingWs else 0L)
+  }
 }
 
 final class CommentNode(var data: String) extends Node {

@@ -175,22 +175,25 @@ object Readability {
   private val mediaInParaTags = Set("img", "embed", "object", "iframe")
 
   /** `innerText(e).length` without materializing the string: an inner
-    * JS-ws run of any length contributes exactly 1; edge runs contribute 0. */
-  private def innerTextLength(e: Element): Int = {
+    * JS-ws run of any length contributes exactly 1; edge runs contribute 0.
+    * Each text node contributes its cached summary ([[TextNode.jsWsSummary]]),
+    * so the walk costs O(nodes), not O(chars). */
+  private[graft] def innerTextLength(e: Element): Int = {
     var len = 0
-    var wsLen = 0
+    var pendingWs = false
     def walk(el: Element): Unit = {
       val ch = el.children
       var i = 0
       while (i < ch.length) {
         ch(i) match {
           case t: TextNode =>
-            val d = t.data
-            var j = 0
-            while (j < d.length) {
-              if (Js.isJsWs(d.charAt(j))) wsLen += 1
-              else { if (wsLen > 0 && len > 0) len += 1; wsLen = 0; len += 1 }
-              j += 1
+            val s = t.jsWsSummary
+            val core = s.toInt
+            if (core == 0) pendingWs ||= (s & TextNode.LeadingWs) != 0
+            else {
+              if ((pendingWs || (s & TextNode.LeadingWs) != 0) && len > 0) len += 1
+              len += core
+              pendingWs = (s & TextNode.TrailingWs) != 0
             }
           case e2: Element => walk(e2)
           case _ =>

@@ -1,8 +1,12 @@
 package graft.pipeline
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapreduce.lib.output.FileOutputCommitter
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.util.LongAccumulator
 
 /** Per-partition lineage/counter record — the checkpoint manifest row of
@@ -38,6 +42,11 @@ object ExtractJob {
   /** [[hostCol]] of any url column. */
   private def hostOf(url: Column) = regexp_replace(try_parse_url(url, lit("HOST")), "^www\\.", "")
 
+  /** The null host's key in a `map<string,int>` mega-host map: Spark map
+    * keys cannot be null, and no parsed host contains a NUL. The Scala maps
+    * ([[megaHostMap]]) key the null host as `null`. */
+  private[pipeline] val NullHostKey = "\u0000"
+
   /**
    * Hash-by-host partitioning with salt-based skew splitting. Hosts whose
    * row count exceeds `rowsPerBucket` are split into `ceil(count/rowsPerBucket)`
@@ -45,14 +54,13 @@ object ExtractJob {
    * salt 0 so their pages stay co-located (host-local downstream joins and
    * robots/side-table broadcasts remain cheap).
    *
-   * The mega-host pre-pass ([[megaHostMap]]) is one aggregate over `url`
-   * only (column-pruned scan + partial agg): at 100 TB it reads one string
-   * column and ships at most `numPartitions + 1` rows to the driver.
+   * The mega-host map is a scalar subquery of the same query
+   * ([[megaHostMapCol]]): one aggregate over `url` only (column-pruned scan
+   * + partial agg) that at 100 TB reads one string column and folds at most
+   * `numPartitions + 1` rows into the map.
    */
-  def saltedRepartitionByHost(pages: DataFrame, numPartitions: Int): DataFrame = {
-    val mega = megaHostMap(pages, numPartitions)
-    applySaltedRepartition(pages, mega, numPartitions)
-  }
+  def saltedRepartitionByHost(pages: DataFrame, numPartitions: Int): DataFrame =
+    saltedExchange(pages, megaHostMapCol(pages, numPartitions), numPartitions).drop("__salt")
 
   /** The mega-host pre-pass alone: hosts whose row count exceeds
     * `totalRows / numPartitions` → their salt-bucket count. The null host
@@ -89,6 +97,32 @@ object ExtractJob {
       .toMap
   }
 
+  /** [[megaHostMap]] as an uncorrelated scalar subquery: a `map<string,int>`
+    * column that the query reading it computes once, in its own plan, so no
+    * separate pre-pass query runs. [[megaHosts]]' rule folded in Catalyst
+    * over [[megaHostCounts]]' rows (grouping id 0: a host, 1: the total),
+    * in integer arithmetic: `rowsPerBucket = max(1, max(1, total) div P)`,
+    * buckets `ceil(n / rowsPerBucket)`. An empty input gives an empty map.
+    * The null host is keyed [[NullHostKey]]. The eager pre-passes keep the
+    * driver-side fold: there a `collect` of the rows is the cheaper plan. */
+  private[pipeline] def megaHostMapCol(pages: DataFrame, numPartitions: Int): Column = {
+    def div(a: Column, b: Column) = call_function("div", a, b)
+    val rowsPerBucket = greatest(lit(1L), div(col("__total"), lit(numPartitions.toLong)))
+    megaHostCounts(pages, numPartitions, col("url"))
+      .agg(collect_list(struct(col("__host0"), col("__n"), col("__gid"))).as("__top"),
+        greatest(lit(1L), coalesce(max(when(col("__gid") === 1, col("__n"))), lit(0L))).as("__total"))
+      .select(map_from_entries(transform(
+        filter(col("__top"), r => r("__gid") === 0 && r("__n") > rowsPerBucket),
+        r => struct(coalesce(r("__host0"), lit(NullHostKey)),
+          div(r("__n") + rowsPerBucket - 1, rowsPerBucket).cast("int")))))
+      .scalar()
+  }
+
+  /** A Scala mega-host map as the `map<string,int>` literal the salting
+    * expression reads. */
+  private def megaHostLit(mega: Map[String, Int]): Column =
+    typedLit(mega.map { case (host, buckets) => (if (host == null) NullHostKey else host) -> buckets })
+
   /** `(__host0, …, __host{N-1}, __n, __gid)`: one aggregate with a grouping
     * set for each of the N `urls`' hosts plus the empty set (all rows); for
     * N = 1 it is `rollup(__host0)`. Set i has grouping id `2^N - 1` minus
@@ -107,31 +141,43 @@ object ExtractJob {
       .limit(urls.size * (numPartitions + 1))
   }
 
-  /** The one salt function: per-url sub-bucket within a mega-host. Shared by
-    * the exchange plan ([[applySaltedRepartition]]) and the bucketed-ingest
-    * layout (Bench) — the two are only exchange-equivalent while they salt
-    * identically, so there is exactly one definition. */
+  /** The one salt function: per-url sub-bucket within a mega-host of
+    * `buckets` salt buckets. Shared by the exchange plan ([[saltOf]]) and
+    * the bucketed-ingest layout (Bench, through [[saltUdf]]) — the two are
+    * only exchange-equivalent while they salt identically, so there is
+    * exactly one definition. A null url (in a mega null-host group) takes
+    * salt 0. */
+  private def salt(url: String, buckets: Int): Int =
+    if (buckets <= 1 || url == null) 0 else Math.floorMod(scala.util.hashing.MurmurHash3.stringHash(url), buckets)
+
+  private lazy val saltFn = udf((url: String, buckets: Int) => salt(url, buckets))
+
+  /** The one salting expression: the salt of `url` on `host` under a
+    * `map<string,int>` mega-host map (a literal or a scalar subquery). A
+    * host missing from the map has one bucket. */
+  private def saltOf(host: Column, url: Column, mega: Column): Column =
+    saltFn(url, coalesce(element_at(mega, coalesce(host, lit(NullHostKey))), lit(1)))
+
+  /** [[salt]] as a `(host, url)` UDF over a broadcast Scala mega-host map. */
   def saltUdf(mega: org.apache.spark.broadcast.Broadcast[Map[String, Int]])
       : org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (host: String, url: String) =>
-      val buckets = mega.value.getOrElse(host, 1)
-      // a null url (in a mega null-host group) takes salt 0
-      if (buckets <= 1 || url == null) 0 else Math.floorMod(scala.util.hashing.MurmurHash3.stringHash(url), buckets)
-    }
+    udf((host: String, url: String) => salt(url, mega.value.getOrElse(host, 1)))
 
   /** Exchange on `xxhash64(host, salt)` using a precomputed mega-host map.
     * Payload-agnostic: works identically on raw pages and on extracted rows
-    * (any relation with a `url` column). */
+    * (any relation with a `url` column). Adds the `__host` column. */
   def applySaltedRepartition(
       df: DataFrame,
       mega: org.apache.spark.broadcast.Broadcast[Map[String, Int]],
-      numPartitions: Int): DataFrame = {
-    val saltFor = saltUdf(mega)
-    df.withColumn("__host", hostCol)
-      .withColumn("__salt", saltFor(col("__host"), col("url")))
+      numPartitions: Int): DataFrame =
+    saltedExchange(df, megaHostLit(mega.value), numPartitions).drop("__salt")
+
+  /** `df` plus `__host` and `__salt` in one projection, exchanged on
+    * `xxhash64(__host, __salt)` under the `map<string,int>` mega-host map
+    * `mega`. */
+  private def saltedExchange(df: DataFrame, mega: Column, numPartitions: Int): DataFrame =
+    df.select(col("*"), hostCol.as("__host"), saltOf(hostCol, col("url"), mega).as("__salt"))
       .repartition(numPartitions, xxhash64(col("__host"), col("__salt")))
-      .drop("__salt")
-  }
 
   /** S2 robots gate: join the small `(host, robots_txt)` side table by host
     * (broadcast — it is bounded by distinct-host count, not corpus size) and
@@ -247,6 +293,11 @@ object ExtractJob {
    * records per-partition lineage into `manifestAcc` (one entry per task,
    * flushed by a task-completion listener so early-terminating consumers —
    * `limit()`, take — still record every started partition).
+   *
+   * One lazy query, no eager job: the mega-host map is a scalar subquery of
+   * the query itself ([[megaHostMapCol]]), computed over the same input —
+   * when that input is a resume anti-join, the subquery reuses the join's
+   * broadcast.
    */
   def extract(
       pages: Dataset[PageRow],
@@ -254,28 +305,25 @@ object ExtractJob {
       counters: Option[Counters] = None,
       manifest: Option[org.apache.spark.util.CollectionAccumulator[ManifestRow]] = None,
       runId: String = "run"
-  ): Dataset[ScrapedRow] =
-    extractWith(pages, megaHostMap(pages.toDF().select("url"), numPartitions), numPartitions,
-      counters, manifest, runId)
+  ): Dataset[ScrapedRow] = {
+    val input = pages.toDF().select("url", "html")
+    extractWith(input, megaHostMapCol(input, numPartitions), numPartitions, counters, manifest, runId)
+  }
 
-  /** The shuffle_first Dataset over an already computed mega-host map. */
+  /** The shuffle_first Dataset of `(url, html)` rows under the
+    * `map<string,int>` mega-host map `mega`. Only the two columns extraction
+    * reads ride the exchange: the crawl-provided text/lang/warc_ts columns
+    * never do (at 100 TB that is a double-digit percentage of shuffle
+    * bytes). */
   private def extractWith(
-      pages: Dataset[PageRow],
-      mega: org.apache.spark.broadcast.Broadcast[Map[String, Int]],
+      input: DataFrame,
+      mega: Column,
       numPartitions: Int,
       counters: Option[Counters],
       manifest: Option[org.apache.spark.util.CollectionAccumulator[ManifestRow]],
       runId: String
-  ): Dataset[ScrapedRow] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    // prune to the two columns extraction reads BEFORE the exchange: the
-    // crawl-provided text/lang/warc_ts columns never ride the shuffle
-    // (at 100 TB that is a double-digit percentage of shuffle bytes)
-    val repartitioned = applySaltedRepartition(pages.toDF().select("url", "html"), mega, numPartitions)
-      .select("url", "html").as[(String, Array[Byte])]
-    fusedExtract(repartitioned, counters, manifest, runId)
-  }
+  ): Dataset[ScrapedRow] =
+    fusedExtract(saltedExchange(input, mega, numPartitions).select("url", "html"), counters, manifest, runId)
 
   /**
    * Exchange-free extraction: the fused per-partition extraction runs
@@ -292,12 +340,8 @@ object ExtractJob {
       counters: Option[Counters] = None,
       manifest: Option[org.apache.spark.util.CollectionAccumulator[ManifestRow]] = None,
       runId: String = "run"
-  ): Dataset[ScrapedRow] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
-    fusedExtract(pages.toDF().select("url", "html").as[(String, Array[Byte])],
-      counters, manifest, runId)
-  }
+  ): Dataset[ScrapedRow] =
+    fusedExtract(pages.toDF().select("url", "html"), counters, manifest, runId)
 
   /**
    * Extract-first plan (BASELINE.md plan-order note): extraction runs on the
@@ -331,9 +375,8 @@ object ExtractJob {
     * silently no-opping the skew split for exactly the hosts it exists to
     * split. Applying the same pure normalization in the pre-pass keeps it a
     * column-pruned scan — extraction still runs exactly once. */
-  private def extractFirstMegaMap(pages: Dataset[PageRow], numPartitions: Int)
-      : org.apache.spark.broadcast.Broadcast[Map[String, Int]] =
-    megaHostMap(pages.toDF().select(normalizedUrl.as("url")), numPartitions)
+  private def extractFirstMegaMap(pages: Dataset[PageRow], numPartitions: Int): Map[String, Int] =
+    megaHostMaps(pages.toDF(), numPartitions, normalizedUrl).head
 
   /** The page url as extraction normalizes it (`ScrapedRow.url`). */
   private[pipeline] def normalizedUrl: Column = {
@@ -354,17 +397,15 @@ object ExtractJob {
   /** The extract_first Dataset over an already computed mega-host map. */
   private def extractFirstWith(
       pages: Dataset[PageRow],
-      mega: org.apache.spark.broadcast.Broadcast[Map[String, Int]],
+      mega: Map[String, Int],
       numPartitions: Int,
       counters: Option[Counters],
       manifest: Option[org.apache.spark.util.CollectionAccumulator[ManifestRow]],
       runId: String
   ): Dataset[ScrapedRow] = {
-    val spark = pages.sparkSession
-    import spark.implicits._
     val extracted = extractOnSplits(pages, counters, manifest, runId)
-    applySaltedRepartition(extracted.toDF(), mega, numPartitions)
-      .drop("__host").as[ScrapedRow]
+    saltedExchange(extracted.toDF(), megaHostLit(mega), numPartitions)
+      .drop("__host", "__salt").as(scrapedRowEncoder)
   }
 
   /** Content-type routing on magic bytes (round 5): Common-Crawl-style
@@ -474,9 +515,10 @@ object ExtractJob {
       catch { case e: InterruptedException => abandon(prePass, sc, tag); throw e }
     val (shuffleFirstMap, extractFirstMap) = maps.fold(e => throw e, identity)
     if (variant == "extract_first")
-      (variant, extractFirstWith(pages, sc.broadcast(extractFirstMap), numPartitions, counters, manifest, runId))
+      (variant, extractFirstWith(pages, extractFirstMap, numPartitions, counters, manifest, runId))
     else
-      (variant, extractWith(pages, sc.broadcast(shuffleFirstMap), numPartitions, counters, manifest, runId))
+      (variant, extractWith(pages.toDF().select("url", "html"), megaHostLit(shuffleFirstMap), numPartitions,
+        counters, manifest, runId))
   }
 
   /** Job-tag prefix of [[extractAuto]]'s concurrent pre-pass jobs. */
@@ -505,15 +547,20 @@ object ExtractJob {
       catch { case _: java.util.concurrent.TimeoutException => }
     }
 
+  /** Encoders of the fused extraction, built once: deriving the
+    * `ScrapedRow` encoder takes milliseconds of reflection per Dataset. */
+  private lazy val urlHtmlEncoder: Encoder[(String, Array[Byte])] = Encoders.tuple(Encoders.STRING, Encoders.BINARY)
+  private lazy val scrapedRowEncoder: Encoder[ScrapedRow] = Encoders.product[ScrapedRow]
+
+  /** The fused extraction of a `(url, html)` relation. */
   private def fusedExtract(
-      input: Dataset[(String, Array[Byte])],
+      input: DataFrame,
       counters: Option[Counters],
       manifest: Option[org.apache.spark.util.CollectionAccumulator[ManifestRow]],
       runId: String
   ): Dataset[ScrapedRow] = {
-    val spark = input.sparkSession
-    import spark.implicits._
-    input.mapPartitions { it =>
+    implicit val rowEncoder: Encoder[ScrapedRow] = scrapedRowEncoder
+    input.as(urlHtmlEncoder).mapPartitions { it =>
       val pid = TaskContext.getPartitionId()
       var nRows = 0L
       var nFail = 0L
@@ -563,40 +610,94 @@ object ExtractJob {
     }
   }
 
+  /** The checkpoint's url column: read with this schema, not an inferred
+    * one. */
+  private val CheckpointUrls = StructType(Seq(StructField("url", StringType)))
+
   /**
    * Checkpointed, resumable run (north rule): skips urls already present in
    * `outDir` via a left-anti join on the checkpoint's url set (column-pruned
    * read), appends new results, and writes the per-partition manifest.
+   *
+   * One planned write query: the resume anti-join, the salted exchange with
+   * its mega-host map as a scalar subquery over the anti-joined rows (which
+   * reuses the join's broadcast, so the join runs once), the fused
+   * extraction and the parquet sink. The checkpoint's urls are read with an
+   * explicit `url STRING` schema, so no schema-inference job runs, and a
+   * checkpoint whose `data` directory holds no committed file yet (a crash
+   * before the first commit leaves only `_temporary/`) reads as empty
+   * instead of failing to infer a schema. What a crashed attempt left in
+   * `data/_temporary` is deleted before the write, so a checkpoint has one
+   * writer at a time. The data commit comes first; the manifest file
+   * ([[writeManifest]], written on the driver, no Spark job) follows it.
    */
   def runResumable(spark: SparkSession, pages: Dataset[PageRow], outDir: String,
                    numPartitions: Int, runId: String): ManifestSummary = {
-    import spark.implicits._
     // checkpoint detection through the SAME filesystem abstraction the
     // reads/writes use — a java.io.File check is false for scheme-qualified
     // paths (file:/, hdfs://, s3a://), which would silently skip the resume
     // join and append duplicate rows
-    val dataPath = new org.apache.hadoop.fs.Path(outDir, "data")
-    val hfs = dataPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val todo: Dataset[PageRow] =
-      if (hfs.exists(dataPath)) {
-        val done = spark.read.parquet(dataPath.toString).select("url")
-        pages.join(done, Seq("url"), "left_anti").as[PageRow]
-      } else pages
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dataPath = new Path(outDir, "data")
+    val fs = dataPath.getFileSystem(conf)
+    val input = pages.toDF().select("url", "html")
+    val todo =
+      if (fs.exists(dataPath)) {
+        // a crashed attempt's uncommitted output: this job's commit would
+        // merge the task output committed there into data/, while the
+        // anti-join does not see it and re-extracts those urls
+        fs.delete(new Path(dataPath, FileOutputCommitter.PENDING_DIR_NAME), true)
+        input.join(spark.read.schema(CheckpointUrls).parquet(dataPath.toString), Seq("url"), "left_anti")
+      } else input
 
     val counters = newCounters(spark)
     val manifestAcc = spark.sparkContext.collectionAccumulator[ManifestRow]("manifest")
-    val extracted = extract(todo, numPartitions, Some(counters), Some(manifestAcc), runId)
-    extracted.write.mode(SaveMode.Append).parquet(outDir + "/data")
+    extractWith(todo, megaHostMapCol(todo, numPartitions), numPartitions, Some(counters), Some(manifestAcc), runId)
+      .write.mode(SaveMode.Append).parquet(dataPath.toString)
 
-    val manifestRows = manifestAcc.value
     import scala.jdk.CollectionConverters._
-    spark.createDataset(manifestRows.asScala.toSeq)
-      .write.mode(SaveMode.Append).parquet(outDir + "/manifest")
+    val manifestRows = manifestAcc.value.asScala.toSeq
+    writeManifest(new Path(outDir, "manifest"), manifestRows, conf)
 
     ManifestSummary(counters.pagesParsed.value, counters.parseFailures.value, counters.emptyContent.value,
-      counters.encryptedPdf.value, manifestRows.size())
+      counters.encryptedPdf.value, manifestRows.size)
   }
 
   final case class ManifestSummary(pagesParsed: Long, parseFailures: Long, emptyContent: Long,
       encryptedPdf: Long, nPartitions: Int)
+
+  /** [[ManifestRow]]'s parquet schema, converted as Spark converts it when it
+    * writes a `Dataset[ManifestRow]`. */
+  private lazy val ManifestSchema =
+    new org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter()
+      .convert(Encoders.product[ManifestRow].schema)
+
+  /** Appends one run's manifest rows to `dir` as one parquet file, written
+    * on the driver: at most one row per partition, so a Spark job would
+    * cost more than the write. The file is written under a hidden name
+    * (`_…`, which readers skip) and renamed into place when closed, so a
+    * reader never sees a partial file. */
+  private def writeManifest(dir: Path, rows: Seq[ManifestRow], conf: Configuration): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroup
+    val name = s"part-${java.util.UUID.randomUUID()}.snappy.parquet"
+    val tmp = new Path(dir, s"_$name")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf)
+      .withType(ManifestSchema)
+      .withCompressionCodec(org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
+      .build()
+    try rows.foreach { r =>
+      val g = new SimpleGroup(ManifestSchema)
+      r.productIterator.zipWithIndex.foreach {
+        case (v: String, i) => g.add(i, v)
+        case (v: Int, i) => g.add(i, v)
+        case (v: Long, i) => g.add(i, v)
+        case _ => // a null string stays unset
+      }
+      writer.write(g)
+    } finally writer.close()
+    if (!tmp.getFileSystem(conf).rename(tmp, new Path(dir, name)))
+      throw new java.io.IOException(s"could not rename $tmp into $dir")
+  }
 }

@@ -227,6 +227,53 @@ class FoldFastPathSpec extends AnyFunSuite {
     assert(c.listLength > 0 && c.headingLength > 0 && c.linkLength > 0)
   }
 
+  /** The per-char walk that the cached text-node summaries replaced. */
+  private def charWalkLength(e: Element): Int = {
+    var len = 0
+    var wsLen = 0
+    def walk(el: Element): Unit = el.children.foreach {
+      case t: TextNode =>
+        t.data.foreach { c =>
+          if (Js.isJsWs(c)) wsLen += 1
+          else { if (wsLen > 0 && len > 0) len += 1; wsLen = 0; len += 1 }
+        }
+      case e2: Element => walk(e2)
+      case _ =>
+    }
+    walk(e)
+    len
+  }
+
+  test("innerTextLength: cached text-node summaries == the char walk") {
+    def check(root: Element, id: String): Unit =
+      (Iterator.single(root) ++ WalkOracle.descendants(root)).foreach { e =>
+        val fast = Readability.innerTextLength(e)
+        assert(fast == charWalkLength(e), id)
+        assert(fast == innerTextLength(e), id)
+      }
+    docs.foreach { case (d, ctx) => check(ctx.doc.html, d.id) }
+    // whitespace edges: NBSP, U+3000, U+2028 and U+FEFF are JS whitespace,
+    // U+200B is not; empty text nodes (the parser makes none) and all-ws
+    // runs that span siblings and element boundaries
+    val texts = Seq("", "\u00a0 ", "a", " \u3000", "", "b\u200bc", "\ufeff", "\u2028d\t\te ", "", "  ")
+    val root = new Element("div")
+    texts.zipWithIndex.foreach { case (t, i) =>
+      if (i % 3 == 1) { val span = new Element("span"); span.appendChild(new TextNode(t)); root.appendChild(span) }
+      else root.appendChild(new TextNode(t))
+    }
+    check(root, "ws edges")
+    assert(Readability.innerTextLength(root) == 9, "a b\u200bc d e")
+    for (t <- Seq("", " ", "\u00a0\u3000", "x")) {
+      val one = new Element("p"); one.appendChild(new TextNode(t)); check(one, s"single '$t'")
+    }
+    // a replaced `data` string is summarized afresh
+    val t = new TextNode("  one  ")
+    val p = new Element("p"); p.appendChild(t)
+    assert(Readability.innerTextLength(p) == 3)
+    t.data = "one two\u00a0\u00a0three"
+    assert(Readability.innerTextLength(p) == 13 && charWalkLength(p) == 13)
+  }
+
   test("parseBlocks: the container is the pruned copy's first match") {
     def parentTagsOf(id: String) = BlockParser.parseBlocks(docs.find(_._1.id == id).get._2.doc).map(_.parentTags)
     // .content comes before main in document order

@@ -98,6 +98,37 @@ class ExtractPlanningSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(assertSameMap(urlRows(withTail), 12) == (0 until 3).map(h => s"h$h.example.com" -> 2).toMap)
   }
 
+  test("the in-query map equals megaHostMap: same map, same partition for every url") {
+    val s = spark; import s.implicits._
+    val pages = PagesGen.generate(spark, 600)
+    val done = pages.toDF().filter(pmod(hash(col("url")), lit(4)) === 0).select("url")
+    val odd = Seq.fill(10)(null: String) ++ Seq.fill(5)("") ++ (0 until 10).map(i => s"not a url $i") ++
+      (0 until 5).map(i => s"https://small$i.example.com/p")
+    // 40 null-host rows of 60: a mega-host at every P > 1
+    val nullMega = Seq.fill(30)(null: String) ++ (0 until 10).map(i => s"bad url $i") ++
+      (0 until 20).map(i => s"https://h${i % 4}.example.com/p$i")
+    val inputs = Seq(
+      "raw" -> pages.toDF().select("url", "html"),
+      "anti-joined" -> pages.toDF().select("url", "html").join(done, Seq("url"), "left_anti"),
+      "null, empty and malformed" -> urlRows(odd),
+      "mega null host" -> urlRows(nullMega),
+      "empty" -> urlRows(Seq.empty))
+    for ((name, input) <- inputs; p <- Seq(1, 2, 8, 64)) {
+      val want = ExtractJob.megaHostMap(input, p)
+      try {
+        val got = spark.range(1).select(ExtractJob.megaHostMapCol(input, p)).head().getMap[String, Int](0)
+          .map { case (h, b) => (if (h == ExtractJob.NullHostKey) null else h) -> b }.toMap
+        assert(got == want.value, s"$name P=$p map")
+        if (name == "empty") assert(got.isEmpty)
+        if (name == "mega null host" && p > 1) assert(got.contains(null), s"P=$p: $got")
+        def pids(df: DataFrame) = df.select(col("url"), spark_partition_id()).as[(String, Int)]
+          .collect().toSeq.sortBy(r => (Option(r._1), r._2))
+        assert(pids(ExtractJob.saltedRepartitionByHost(input, p)) ==
+          pids(ExtractJob.applySaltedRepartition(input, want, p)), s"$name P=$p partition ids")
+      } finally want.destroy()
+    }
+  }
+
   test("megaHostMap runs in at most two jobs and caches nothing") {
     val pages = PagesGen.generate(spark, 600).toDF().select("url", "html")
     val sc = spark.sparkContext

@@ -96,12 +96,12 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     val mainScan = readSchemas.find(_.contains("html")).getOrElse(fail(s"no html scan in:\n$p"))
     assert(!mainScan.contains("warc_ts") && !mainScan.contains("text") && !mainScan.contains("lang"),
       s"unused columns not pruned from the shuffled scan: $mainScan")
-    // the mega-host pre-pass runs as its own eager job on the same input:
-    // its scan must read url only
-    val pre = plan(ExtractJob.megaHostCounts(pages.toDF().select("url", "html"), 4, col("url")))
-    val preScans = "ReadSchema: [^\n]+".r.findAllIn(pre).toList
-    assert(preScans.nonEmpty && preScans.forall(r => r.contains("url") && !r.contains("html")),
-      s"pre-pass must scan url only:\n$pre")
+    // the mega-host map is a scalar subquery of the same plan: its scan
+    // must read url only
+    assert(p.contains("Subquery"), s"no mega-host subquery in:\n$p")
+    val preScans = readSchemas.filterNot(_.contains("html"))
+    assert(preScans.nonEmpty && preScans.forall(_.contains("ReadSchema: struct<url:string>")),
+      s"the subquery must scan url only:\n$p")
     // so must extractAuto's pre-pass, which serves both plans
     val both = plan(ExtractJob.megaHostCounts(pages.toDF(), 4, col("url"), ExtractJob.normalizedUrl))
     val bothScans = "ReadSchema: [^\n]+".r.findAllIn(both).toList

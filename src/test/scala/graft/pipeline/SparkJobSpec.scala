@@ -1,6 +1,10 @@
 package graft.pipeline
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
@@ -91,6 +95,76 @@ class SparkJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val manifest = spark.read.parquet(out + "/manifest").as[ManifestRow].collect()
     assert(manifest.map(_.n_rows).sum == 60)
     assert(manifest.forall(m => m.run_id == "run1" || m.run_id == "run2"))
+  }
+
+  test("a checkpoint left by a crash before its first commit resumes, each url once") {
+    // the crash leaves data/ holding only the committer's _temporary/: no
+    // committed file to infer a schema from, and one task's committed
+    // output that the job never committed
+    val out = java.nio.file.Files.createTempDirectory("graft_ckpt_crash")
+    val pages = PagesGen.generate(spark, 40)
+    val staged = out.resolve("staged").toString
+    ExtractJob.extract(pages.limit(10), 1).write.parquet(staged)
+    val task = java.nio.file.Files.createDirectories(
+      out.resolve("data/_temporary/0/task_202610200000000000_0001_m_000000"))
+    new java.io.File(staged).listFiles().filter(_.getName.startsWith("part-"))
+      .foreach(f => java.nio.file.Files.copy(f.toPath, task.resolve(f.getName)))
+    assert(ExtractJob.runResumable(spark, pages, out.toString, 4, "run1").pagesParsed == 40)
+    val data = spark.read.parquet(out.toString + "/data")
+    assert(data.count() == 40 && data.select("url").distinct().count() == 40)
+    assert(ExtractJob.runResumable(spark, pages, out.toString, 4, "run2").pagesParsed == 0)
+  }
+
+  test("a resumed run is one write query: at most 5 jobs, none writes the manifest") {
+    val sc = spark.sparkContext
+    val pages = PagesGen.generate(spark, 200)
+    import org.apache.spark.sql.functions._
+    val seeded = pages.toDF().filter(pmod(hash(col("url")), lit(4)) === 0)
+    /** A fresh checkpoint holding a quarter of the urls. */
+    def seed(): String = {
+      val out = java.nio.file.Files.createTempDirectory("graft_ckpt_jobs").toString
+      val sp = spark
+      import sp.implicits._
+      ExtractJob.runResumable(spark, seeded.as[PageRow], out, 4, "seed")
+      TestListenerBus.drain(sc)
+      out
+    }
+    ExtractJob.runResumable(spark, pages, seed(), 4, "resume") // warm: codegen, plan caches
+    var jobs = 0
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
+    }
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val qeListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized { plans += qe.analyzed.toString }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val out = seed()
+    sc.addSparkListener(listener)
+    spark.listenerManager.register(qeListener)
+    val summary =
+      try {
+        val s = ExtractJob.runResumable(spark, pages, out, 4, "resume")
+        TestListenerBus.drain(sc)
+        s
+      } finally {
+        sc.removeSparkListener(listener)
+        spark.listenerManager.unregister(qeListener)
+      }
+    assert(summary.pagesParsed == 200 - seeded.count())
+    assert(jobs >= 1 && jobs <= 5, s"a resumed run ran $jobs jobs")
+    assert(plans.size == 1, s"one query, got:\n${plans.mkString("\n")}")
+    assert(!plans.exists(_.contains("manifest")), s"a Spark job wrote the manifest:\n${plans.mkString("\n")}")
+    // the driver-written manifest reads back with ManifestRow's columns
+    val sp = spark
+    import sp.implicits._
+    val manifest = spark.read.parquet(out + "/manifest")
+    assert(manifest.schema.map(f => f.name -> f.dataType) ==
+      org.apache.spark.sql.Encoders.product[ManifestRow].schema.map(f => f.name -> f.dataType))
+    val rows = manifest.as[ManifestRow].collect()
+    assert(rows.filter(_.run_id == "resume").map(_.n_rows).sum == summary.pagesParsed)
+    assert(rows.map(_.n_rows).sum == 200)
   }
 
   test("counters: pages_parsed / parse_failures / empty_content") {
